@@ -25,6 +25,23 @@ object Bench {
       // are each a lang-grain rollup of it — VERDICT r10 next #7)
       "shared_mt_pairs" -> (ops.Text.sharedMtPairCensus(_, _)))
 
+  /** 2 warm passes (VERDICT r10 #1): per-query BEST across passes is
+    * still the noise-robust statistic (a loaded scheduler only ever ADDS
+    * time), but 3 warm passes blew the driver's wall budget under
+    * sustained host contention — the r10 bench died at rc=124 with
+    * NOTHING parseable. Two passes keep the noise floor; the wall budget
+    * below sheds the second one when the run is slow.
+    */
+  private val WarmPasses = 2
+
+  /** Wall budget (VERDICT r10 #1b): before each warm pass, if the
+    * elapsed time plus a conservative estimate of the next pass would
+    * cross the budget, the remaining warm passes are SKIPPED — a
+    * self-truncated run with real numbers beats a timeout kill with
+    * none.
+    */
+  private val WallBudgetSec = 1500.0
+
   private def loadavg(): String =
     try new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("/proc/loadavg")), "UTF-8").trim
@@ -34,35 +51,7 @@ object Bench {
     val wallStart = System.nanoTime()
     def elapsedSec: Double = (System.nanoTime() - wallStart) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_NOCACHE=1 → skip the table-cache warm pass entirely
-    // (cold-scan numbers only)
-    val skipCache = sys.env.get("SPARK_GRAFT_NOCACHE").contains("1")
-    // 2 warm passes by default (VERDICT r10 #1): per-query BEST across
-    // passes is still the noise-robust statistic (a loaded scheduler
-    // only ever ADDS time), but 3 warm passes blew the driver's wall
-    // budget under sustained host contention — the r10 bench died at
-    // rc=124 with NOTHING parseable. Two passes keep the noise floor;
-    // the wall budget below sheds the second one when the run is slow.
-    val warmPasses = math.max(1,
-      sys.env.getOrElse("SPARK_GRAFT_WARM_PASSES", "2").toInt)
-    // Wall budget (VERDICT r10 #1b): before each warm pass, if the
-    // elapsed time plus a conservative estimate of the next pass
-    // (1.2× the slowest completed full pass) would cross the budget,
-    // the remaining warm passes are SKIPPED — a self-truncated run
-    // with real numbers beats a timeout kill with none.
-    val wallBudgetSec =
-      sys.env.getOrElse("SPARK_GRAFT_WALL_BUDGET_SEC", "1500").toDouble
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // pinned at construction so no query's timing depends on whether
-      // an events query (whose loader also sets it) ran first (ADVICE r5)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     // loadavg before/after → stderr: a loaded co-tenant run is
     // self-diagnosing from the detail file (VERDICT r6 #2)
     System.err.println(s"[bench] loadavg at start: ${loadavg()}")
@@ -90,22 +79,10 @@ object Bench {
       System.err.println(s"[bench] warmup failed: ${e.getMessage}")
     }
     // name-sorted: Map iteration order is hash-random, which made
-    // per-round per-query timing comparisons noisy
-    // dev-loop filter (mirrors Verify's SPARK_GRAFT_ONLY): isolate keys
-    // when chasing a per-key timing anomaly; the driver never sets it
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-    // a mistyped SPARK_GRAFT_ONLY key silently benchmarked ZERO queries
-    // and produced an empty-but-plausible timing file (ADVICE r6)
-    only.foreach { o =>
-      val unknown = o -- SparkEntry.queries.keySet
-      if (unknown.nonEmpty) System.err.println(
-        s"[bench] SPARK_GRAFT_ONLY keys not in the registry: ${unknown.toSeq.sorted.mkString(", ")}")
-      require(selected.nonEmpty,
-        s"SPARK_GRAFT_ONLY matched no registered query (names: ${o.mkString(",")})")
-    }
+    // per-round per-query timing comparisons noisy. SPARK_GRAFT_ONLY
+    // isolates keys when chasing a per-key timing anomaly.
+    val (only, keys) = Registry.selected("bench")
+    val selected = keys.sortBy(_._1)
     // Failure tracking (VERDICT r10 wrong #2): a throwing query records
     // its time-to-exception — after the round-10 timeout kill stopped
     // the SparkContext, every remaining query "completed" in ~4 ms and
@@ -213,7 +190,7 @@ object Bench {
     val coldRun = runAll()
     val coldResults = coldRun.map { case (n, t, _) => (n, t) }
     val coldSec = coldResults.map(_._2).sum
-    emit(sharedResults, coldResults, Nil, 0, partial = !skipCache)
+    emit(sharedResults, coldResults, Nil, 0, partial = true)
     // Pass 2..N — WARM: shared-computation reuse across the recurring
     // workload (SURVEY.md §7.5): cache the source tables once, keep the
     // Caches.shared relations resident across queries — the classic
@@ -238,12 +215,12 @@ object Bench {
     // the budget guard applies to the FIRST warm pass too: if the cold
     // pass alone consumed the budget, one more full pass would hand the
     // driver a timeout kill instead of the cold numbers already emitted
-    val warmBudgetOk = wallBudgetSec - elapsedSec >= nextPassEstimate
-    if (!skipCache && !warmBudgetOk) System.err.println(
+    val warmBudgetOk = WallBudgetSec - elapsedSec >= nextPassEstimate
+    if (!warmBudgetOk) System.err.println(
       f"[bench] wall budget: ${elapsedSec}%.0f s elapsed of " +
-        f"$wallBudgetSec%.0f s after cold — skipping all warm passes")
+        f"$WallBudgetSec%.0f s after cold — skipping all warm passes")
     val warmResults: Seq[(String, Double)] =
-      if (skipCache || !warmBudgetOk) coldResults else {
+      if (!warmBudgetOk) coldResults else {
       try {
         Seq[(SparkSession, String) => DataFrame](
           Tables.region, Tables.nation, Tables.customer, Tables.supplier,
@@ -256,13 +233,13 @@ object Bench {
       var acc: Seq[(String, Double, Boolean)] = Seq.empty
       var i = 1
       var stop = false
-      while (i <= warmPasses && !stop) {
-        val headroom = wallBudgetSec - elapsedSec
+      while (i <= WarmPasses && !stop) {
+        val headroom = WallBudgetSec - elapsedSec
         if (i > 1 && headroom < nextPassEstimate) {
           System.err.println(
             f"[bench] wall budget: ${elapsedSec}%.0f s elapsed of " +
-              f"$wallBudgetSec%.0f s, next pass needs ~$nextPassEstimate%.0f s " +
-              f"— skipping warm passes $i..$warmPasses")
+              f"$WallBudgetSec%.0f s, next pass needs ~$nextPassEstimate%.0f s " +
+              f"— skipping warm passes $i..$WarmPasses")
           stop = true
         } else {
           val t0 = System.nanoTime()
@@ -270,7 +247,7 @@ object Bench {
           val passSec = (System.nanoTime() - t0) / 1e9
           slowestWarmSec = math.max(slowestWarmSec, passSec)
           System.err.println(
-            f"[bench] warm pass $i/$warmPasses total ${r.map(_._2).sum}%.3f s, loadavg ${loadavg()}")
+            f"[bench] warm pass $i/$WarmPasses total ${r.map(_._2).sum}%.3f s, loadavg ${loadavg()}")
           acc = if (acc.isEmpty) r
             else acc.zip(r).map { case ((n, t1, ok1), (_, t2, ok2)) =>
               // per-query minimum over OK timings only: a failed pass's
@@ -285,7 +262,7 @@ object Bench {
           warmPassesDone = i
           emit(sharedResults, coldResults,
             acc.map { case (n, t, _) => (n, t) }, warmPassesDone,
-            partial = i < warmPasses)
+            partial = i < WarmPasses)
           i += 1
         }
       }
@@ -334,12 +311,12 @@ object Bench {
     // "warm" numbers are really cold timings would read as a mass
     // regression at the next gate comparison
     val clean = failedKeys.isEmpty && !spark.sparkContext.isStopped &&
-      (skipCache || warmPassesDone >= 1)
+      warmPassesDone >= 1
     if (only.isEmpty && !clean) System.err.println(
       s"[bench] NOT appending history: ${failedKeys.size} failed " +
         s"(${failedKeys.take(5).mkString(", ")}${if (failedKeys.size > 5) ", …" else ""})" +
         (if (spark.sparkContext.isStopped) "; SparkContext stopped" else "") +
-        (if (!skipCache && warmPassesDone == 0) "; no warm pass completed" else ""))
+        (if (warmPassesDone == 0) "; no warm pass completed" else ""))
     if (only.isEmpty && clean) try {
       val hist = java.nio.file.Paths.get("bench_history/history.jsonl")
       java.nio.file.Files.createDirectories(hist.getParent)
@@ -398,7 +375,7 @@ object Bench {
     // final authoritative line (same format, not partial) — supersedes
     // every per-pass line as the last stdout content
     emit(sharedResults, coldResults,
-      if (skipCache || warmPassesDone == 0) Nil else warmResults,
+      if (warmPassesDone == 0) Nil else warmResults,
       warmPassesDone, partial = false)
     spark.stop()
   }

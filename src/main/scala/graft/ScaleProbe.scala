@@ -1,367 +1,208 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-/** One-off 10x scale probe: replicate sf0.1 with shifted keys to /tmp and
-  * time the headline queries — evidence the plans scale ~linearly. */
+
+/** Scale probe: `ScaleProbe <copies> <key|probe>...` stages the sf0.1
+  * fixtures at `copies`× under `/tmp/graft_probe_x<copies>` (idempotent)
+  * and times each named registry key or probe on it, printing one
+  * `SCALE<copies>x <name>: <s> s rows=<n>` line per measurement. Run with
+  * e.g. `sbt "runMain graft.ScaleProbe 10 q_agg_q1 component_loop"`;
+  * raise `SPARK_DRIVER_MEM` for 100×.
+  *
+  * One staging recipe at every copy count:
+  *
+  *  - FACT tables (lineitem, orders, events, embeddings) replicate sf0.1
+  *    with their keys shifted per copy. o_custkey is kept, so orders fan
+  *    out onto the fixed customer set.
+  *  - DIMENSIONS (customer/supplier/part/nation/region) stay at 1×: a
+  *    real warehouse scales facts onto a fixed dimensional cardinality,
+  *    while duplicated dims multiply dim-join fan-out by copies² (at 100×
+  *    q_graph_mst would be a 600-billion-row intermediate, a staging
+  *    artifact, not a plan property).
+  *  - DOCUMENTS are REGENERATED (deterministic md5-word text, 4%
+  *    identical-text 2-cliques) instead of duplicated: key-shifted copies
+  *    make every doc a copies-clique in the pair graph (the
+  *    duplicated-corpus caveat SQUARED, not a corpus shape), while a real
+  *    crawl holds the dup RATE roughly constant. The corpus-sized stages
+  *    (tokenize, postings, prefix filter) still scale the full copies×.
+  *
+  * Registry keys are timed by `toRdd.count()` — the full output schema,
+  * so a left-join census key cannot have its stats subtree
+  * join-eliminated out of the measurement (round 9, the Bench fix) — and
+  * BOTH cache lifetimes are released after each: with shared relations
+  * resident, the first consumer would be billed for the whole shared
+  * build and later ones would time a cache read.
+  *
+  * Named probes:
+  *
+  *  - `band_candidates`: the banded similarity index over the staged
+  *    (key-shifted, so worst-case same-band occupancy) embeddings, priced
+  *    once and kept RESIDENT while q_dedup_embed and q_sim_threshold_join
+  *    run (the Bench pass-0 shape); the candidate rowcount is the
+  *    sub-quadratic evidence.
+  *  - `mt_triple`: the shared MT pair census, priced once and kept
+  *    resident while BLEU/ROUGE/chrF run as the lang-grain rollups.
+  *  - `graph_regen`: the trade-graph keys on a REGENERATED feed (its own
+  *    staging dir): fact keys AND their dimension foreign keys shift
+  *    together, so each copy is a disjoint, internally-consistent
+  *    subgraph over the same 25 nations and every join stays 1:1 per row.
+  *  - `hook_loop` / `hook_loop_fallback`: `Geo.contractedHookLabels` (the
+  *    code q_geo_dbscan runs) on a chain forest of copies×100 components
+  *    of 150 nodes — the label scale fixtures cannot reach, since dbscan's
+  *    core graph is supercritical under duplication. The fallback run sets
+  *    spark.graft.broadcastLabelLimit=100000, so maps past 100 k rows take
+  *    the shuffle-hash plan instead of a broadcast.
+  *  - `component_loop`: `Pipeline.componentLabels` on copies×5000 blocked
+  *    4-node components.
+  *
+  * The loop probes check their exact component counts.
+  */
 object ScaleProbe {
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 64)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val src = "/root/testdata/sf0.1"
-    val dst = "/tmp/graft_sf1"
-    val copies = 10
-    val off = 1000000000L
-    if (!new java.io.File(s"$dst/_done").exists()) {
-      def rep(name: String, shifts: Map[String, Boolean]): Unit = {
-        val base =
-          if (name == "events") {
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            spark.read.parquet(s"$src/$name.parquet") // ts stays raw long ns
-          } else spark.read.parquet(s"$src/$name.parquet")
-        val out = (0 until copies).map { i =>
-          shifts.foldLeft(base) { case (df, (c, shift)) =>
-            if (shift) df.withColumn(c, col(c) + lit(i * off)) else df
-          }
-        }.reduce(_ unionByName _)
-        out.write.mode("overwrite").parquet(s"$dst/$name.parquet")
-        println(s"staged $name: ${out.count()}")
-      }
-      rep("lineitem", Map("l_orderkey" -> true))
-      rep("orders", Map("o_orderkey" -> true))          // o_custkey kept: fan-out
-      rep("customer", Map.empty)
-      rep("part", Map.empty); rep("supplier", Map.empty)
-      rep("nation", Map.empty); rep("region", Map.empty)
-      rep("events", Map("event_id" -> true, "user_id" -> true))
-      rep("documents", Map("doc_id" -> true))
-      rep("embeddings", Map("vec_id" -> true))
-      // keep one probe vector at vec_id=0 only (copy 0 keeps ids)
-      new java.io.File(s"$dst/_done").createNewFile()
+  private val Src = "/root/testdata/sf0.1"
+  private val Off = 1000000000L
+  private val Probes = Seq("band_candidates", "mt_triple", "graph_regen",
+    "hook_loop", "hook_loop_fallback", "component_loop")
+
+  private def done(dir: String, name: String): java.io.File =
+    new java.io.File(s"$dir/_done_$name")
+
+  /** Union of `copies` copies of a sf0.1 table, `shifted` columns offset
+    * by `copy × Off`, written to `dir` once. */
+  private def replicate(spark: SparkSession, dir: String, name: String,
+      shifted: Seq[String], copies: Int): Unit = if (!done(dir, name).exists()) {
+    val base = spark.read.parquet(s"$Src/$name.parquet")
+    (0 until copies).map { i =>
+      shifted.foldLeft(base)((df, c) => df.withColumn(c, col(c) + lit(i * Off)))
+    }.reduce(_ unionByName _)
+      .write.mode("overwrite").parquet(s"$dir/$name.parquet")
+    println(s"staged $dir/$name: ${spark.read.parquet(s"$dir/$name.parquet").count()}")
+    done(dir, name).createNewFile()
+  }
+
+  private def stage(spark: SparkSession, dir: String, copies: Int): Unit = {
+    // events may carry ns timestamps: read them raw, as Tables.events does
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    replicate(spark, dir, "lineitem", Seq("l_orderkey"), copies)
+    replicate(spark, dir, "orders", Seq("o_orderkey"), copies)
+    replicate(spark, dir, "events", Seq("event_id", "user_id"), copies)
+    replicate(spark, dir, "embeddings", Seq("vec_id"), copies)
+    for (dim <- Seq("customer", "part", "supplier", "nation", "region"))
+      replicate(spark, dir, dim, Nil, 1)
+    // documents: text = 80 deterministic md5-derived words; docs j with
+    // j%50 ∈ {0,1} share one group id → identical text → an
+    // exact-Jaccard 2-clique (4% of docs paired); everything else is
+    // (whp) pairless
+    if (!done(dir, "documents").exists()) {
+      val nDocs = spark.read.parquet(s"$Src/documents.parquet").count() * copies
+      spark.range(nDocs).select(col("id").as("doc_id"),
+          when(pmod(col("id"), lit(50)) < 2,
+            col("id") - pmod(col("id"), lit(50))).otherwise(col("id"))
+            .as("gid"))
+        .withColumn("text", expr(
+          """concat_ws(' ', transform(sequence(0, 79),
+            |  i -> substr(md5(concat(cast(gid as string), '-',
+            |    cast(i as string))), 1, 8)))""".stripMargin))
+        .select(col("doc_id"), col("text"),
+          element_at(array(lit("en"), lit("de"), lit("fr"), lit("es"),
+            lit("zh")), (pmod(col("gid"), lit(5)) + 1).cast("int"))
+            .as("lang"),
+          concat(lit("src"), pmod(col("gid"), lit(7))).as("source"),
+          length(col("text")).cast("long").as("n_chars"))
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      println(s"staged $dir/documents: " +
+        s"${spark.read.parquet(s"$dir/documents.parquet").count()}")
+      done(dir, "documents").createNewFile()
     }
-    // warmup (mirrors Bench)
-    spark.read.parquet(s"$dst/lineitem.parquet").groupBy(col("l_returnflag")).count().count()
-    for (q <- Seq("q_agg_q1", "q_join_star", "q_join_range", "q_agg_having",
-        "q_text_wordcount", "q_dedup_fuzzy_minhash", "q_sim_cosine_topk",
-        "q_stream_session",
-        // round-4 rewrites: band-candidate cosine pairs, total ngram /
-        // levenshtein dedup, grid-cell IVF, stream join, PCM decode
-        "q_sim_threshold_join", "q_dedup_embed", "q_dedup_ngram",
-        "q_text_levenshtein", "q_sim_jaccard_pairs", "q_sim_ann_ivf",
-        "q_stream_join", "q_mm_audio_pcm",
-        "q_join_q5", "q_join_salted", "q_sim_knn_join", "q_text_tfidf",
-        "q_pipeline_e2e", "q_stream_funnel",
-        // round-5: independent hyperplanes (real band pruning), shared
-        // pair graph for components, bucketed stream join, samplers,
-        // file-format round-trips
-        "q_sim_ann_lsh", "q_dedup_components", "q_sample_hash",
-        "q_sample_stratified", "q_split_train_val", "q_source_csv",
-        "q_source_json", "q_pack_sequences", "q_text_contamination",
-        // round-5 second batch: sessionization, curation, lake layout
-        "q_win_sessionize", "q_text_repetition", "q_dedup_incremental",
-        "q_mix_weighted", "q_profile_hist", "q_source_orc",
-        "q_source_partitioned",
-        // round-5 third batch: iterative graph, time-series fill,
-        // upsert merge, bucketed co-located join
-        "q_graph_pagerank", "q_win_gapfill", "q_lake_merge",
-        "q_join_bucketed", "q_agg_incremental", "q_ts_anomaly",
-        "q_text_collocations", "q_win_funnel_cohort", "q_mm_video_frames", "q_mm_image_resize",
-        // round-5 fourth batch: retention/EWMA/OHLC/rolling time series,
-        // trade-graph triangles + BFS, mode, vocab census, count-min,
-        // temperature mixing, Gopher gate, containment dedup
-        "q_win_retention", "q_ts_ewma", "q_ts_ohlc", "q_ts_moving",
-        "q_graph_triangles", "q_graph_bfs", "q_agg_mode", "q_text_vocab",
-        "q_sketch_countmin", "q_mix_temperature", "q_quality_gopher",
-        "q_text_containment",
-        // round-5 fifth batch: OLS trend, bitset census, streaks,
-        // negative sampling
-        "q_ts_trend", "q_agg_bitset", "q_win_streak",
-        "q_sample_negative",
-        // round-5 sixth batch: entropy census, degree census, bloom
-        // prefilter join, Zipf slope, keyphrases, autocorrelation
-        "q_agg_entropy", "q_graph_degree", "q_join_bloom",
-        "q_text_zipf", "q_text_keyphrase", "q_ts_autocorr",
-        // round-5 seventh batch: materialized upsampling, per-column
-        // profile, CUSUM changepoint
-        "q_mix_upsample", "q_profile_cols", "q_ts_changepoint",
-        // round-5 eighth batch: exact-integer HLL, audio decimation,
-        // join-key skew profile
-        "q_sketch_hll", "q_mm_audio_downsample", "q_profile_skew",
-        // round-5 ninth batch: binary-cosine prefix join, equi-depth
-        // deciles, diurnal seasonality
-        "q_sim_cosine_sets", "q_profile_depth", "q_ts_seasonality",
-        // round-5 tenth batch: graph node similarity, bootstrap,
-        // oracle-graded simhash
-        "q_graph_jaccard", "q_sample_bootstrap",
-        "q_dedup_simhash_exact",
-        // round-5 eleventh batch: mergeable-HLL identity, nested JSON
-        "q_sketch_hll_merge", "q_source_json_nested",
-        // round-5 twelfth batch: FK orphan audit, bigram LM head
-        "q_audit_fk", "q_text_bigram_lm",
-        // round-6: iterative k-means, graded watermark drop, exact
-        // MinHash banding, DEFLATE media decode, LM-perplexity filter,
-        // duplicated-substring census, batch perceptron classifier
-        "q_ml_kmeans", "q_stream_late", "q_dedup_minhash_exact",
-        "q_mm_features", "q_text_perplexity", "q_dedup_substr",
-        "q_ml_perceptron", "q_win_pattern", "q_text_bpe",
-        "q_source_text", "q_join_incremental", "q_ts_forecast",
-        "q_dedup_cluster_rep",
-        // round-6 batches 6-8: line-grain dedup, layout, classifiers,
-        // SQ/phash candidates, sketches, url canon
-        "q_dedup_lines", "q_lake_scd2", "q_lake_zorder",
-        "q_ml_naive_bayes", "q_ts_interp", "q_graph_label_prop",
-        "q_sim_ann_sq", "q_mm_phash", "q_fn_url", "q_sketch_bloom",
-        "q_sketch_quantile",
-        // round-7: persisted-index ANN serve, unicode normalize
-        // pipeline, manifest-lake time travel, video scene cuts
-        "q_sim_ann_serve", "q_text_unicode", "q_lake_timetravel",
-        "q_mm_scene_change",
-        // round-7 batches 3-6: expectation suite, PII scrub, BM25,
-        // JL projection, version change feed, rolling distinct,
-        // landmark closeness, Holt fold
-        "q_audit_expectations", "q_text_pii", "q_text_bm25",
-        "q_vec_randproj", "q_lake_cdc", "q_win_distinct",
-        "q_graph_closeness", "q_ts_holt", "q_sim_ann_pq",
-        "q_text_bpe_encode", "q_mm_augment", "q_source_corrupt",
-        "q_graph_scc",
-        // round-7 batches 10-16: TPC-H Q3/Q18, k-core peel, chunking,
-        // winnowing, stump split search, correlation profile, vacuum
-        "q_join_q3", "q_agg_q18", "q_graph_kcore", "q_text_chunking",
-        "q_text_winnowing", "q_ml_stump", "q_profile_corr",
-        "q_lake_vacuum",
-        // round-7 batches 17-19: digest shard census, shifted-moment
-        // OLS, Theil–Sen pairs, packed-window attribution, stemmer,
-        // TPC-H Q10/Q14 shapes, Markov transition census
-        "q_fn_hash", "q_ml_linreg", "q_ts_theil_sen", "q_win_attrib",
-        "q_text_stem", "q_join_q10", "q_agg_q14", "q_ts_transitions",
-        // round-7 batch 20: KMV set-op sketch, IQR fences, schema merge
-        "q_sketch_kmv", "q_profile_iqr", "q_source_evolution",
-        // round-7 batches 21-22: scan-floor Q6, basket lift, hashing
-        // trick, Adamic-Adar, MR inverted index
-        "q_agg_q6", "q_graph_copurchase", "q_text_hashvec",
-        "q_graph_adamic_adar", "q_mr_invidx",
-        // round-7 batches 23-24: kNN vote, LTOB decimation, JSON-array
-        // parse, Benford audit
-        "q_ml_knn", "q_ts_downsample", "q_source_json_multiline",
-        "q_profile_benford", "q_graph_hits",
-        // round-7 batch 26: Gini ranks, sweep-line concurrency
-        "q_agg_gini", "q_win_concurrency",
-        // round-7 batch 27: compaction protocol, balanced downsample
-        "q_lake_compact", "q_sample_balanced",
-        // round-7 batch 28: null-safe join, forecast backtest
-        "q_join_null_safe", "q_ts_eval_wape", "q_mr_grep",
-        // round-7 batch 30: OR pushdown, assortativity
-        "q_join_q19", "q_graph_assortativity",
-        // round-7 batch 31: activation latency, binary blobs
-        "q_win_latency", "q_source_binary",
-        // round-7 batch 32: period discovery, HHI concentration
-        "q_ts_period", "q_agg_hhi", "q_win_intervals",
-        // round-7 batch 34: composite UDAF, reciprocity
-        "q_udaf_wavg", "q_graph_reciprocity", "q_text_lexicon",
-        "q_text_divergence",
-        // round-7 batch 36: transitivity, FILTER aggregates, CCF, MAD
-        "q_graph_clustering", "q_agg_filtered", "q_ts_cross_corr",
-        "q_profile_mad",
-        // round-7 batch 38: TeraSort through the veneer, grid NN join
-        "q_mr_sort", "q_geo_grid",
-        // round-7 batch 39: Manhattan trajectories, rolling median
-        "q_geo_trajectory", "q_ts_moving_median",
-        // round-7 batch 40: rank movers, IPv4/CIDR census
-        "q_win_rank_delta", "q_fn_ip",
-        // round-7 batch 41: depth-2 CART
-        "q_ml_tree",
-        // round-7 batch 42: counter rate(), ordered reassembly
-        "q_ts_rate", "q_text_reassembly",
-        // round-7 batch 43: SCD2 point-in-time read, gzip ingestion
-        "q_lake_scd2_read", "q_source_compressed",
-        // round-7 batch 44: Pareto skyline, rendezvous sharding
-        "q_agg_skyline", "q_shard_rendezvous",
-        // round-7 batch 45: Borůvka spanning forest, Hamilton allocation
-        "q_graph_mst", "q_win_alloc",
-        // round-7 batch 46: native XML round-trip, classifier evaluation
-        "q_source_xml", "q_ml_confusion",
-        // round-7 batch 47: shallow clone, source-priority dedup
-        "q_lake_clone", "q_dedup_priority",
-        // round-7 batch 49: MR reduce-side join, directional asof
-        "q_mr_join", "q_join_asof_nearest",
-        // round-7 batch 50: transport codecs, ALS half-step
-        "q_fn_base64", "q_ml_als_step",
-        // round-7 batch 51: banded DTW
-        "q_ts_dtw",
-        // round-7 batch 52: greedy LM decode, geohash bucketing
-        "q_text_generate", "q_geo_hash",
-        // round-7 batch 53: ANN recall eval
-        "q_sim_recall",
-        // round-7 batch 54: robust MAD anomalies, Pareto 80/20
-        "q_ts_anomaly_mad", "q_agg_pareto",
-        // round-7 batch 55: Walsh–Hadamard audio features
-        "q_mm_wht",
-        // round-7 batch 56: trimmed mean, content UUIDs
-        "q_profile_trimmed", "q_fn_uuid",
-        // round-7 batch 57: langid confusion eval
-        "q_text_lang_confusion",
-        // round-7 batch 58: calibration curve
-        "q_ml_calibration",
-        // round-7 batch 59: Bollinger breakouts, exact two-sample KS
-        "q_ts_bollinger", "q_profile_ks",
-        // round-7 batch 60: STL-lite decomposition, systematic sampling
-        "q_ts_decompose", "q_sample_systematic",
-        // round-7 batch 61: token-bucket rate-limit audit
-        "q_win_ratelimit",
-        // round-7 batch 62: market-basket association rules
-        "q_agg_basket_lift",
-        // round-7 batch 63: histogram equalization
-        "q_mm_histeq",
-        // round-7 batch 64: AMS F2 sketch
-        "q_sketch_ams",
-        // round-7 batch 65: MoM growth, whole-file ingestion
-        "q_ts_growth", "q_source_wholetext",
-        // round-7 batch 66: directed motifs, DAU/MAU stickiness
-        "q_graph_motifs", "q_ts_dau_mau",
-        // round-7 batch 67: categorical association, rank-sum test
-        "q_agg_cramers_v", "q_agg_mannwhitney",
-        // round-7 batch 68: SAX day-words, Simpson diversity
-        "q_ts_sax", "q_text_simpson",
-        // round-7 batch 69: Brier decomposition, permutation entropy
-        "q_ml_brier", "q_ts_perm_entropy",
-        // round-7 batch 70: RLE codec census, eccentricity/diameter
-        "q_mm_rle", "q_graph_eccentric",
-        // round-7 batch 71: consistent-hash ring, burstiness
-        "q_shard_consistent", "q_text_burstiness",
-        // round-7 batch 72: Heaps growth, Markov entropy rate
-        "q_text_heaps", "q_ts_entropy_rate",
-        // round-7 batch 73: Theil decomposition, delta-varint codec
-        "q_agg_theil", "q_mm_delta",
-        // round-7 batch 74: mutual information, k-truss edge support
-        "q_agg_mutual_info", "q_graph_truss",
-        // round-7 batch 75: Welch t-test, region-partition modularity
-        "q_agg_ttest", "q_graph_modularity",
-        // round-7 batch 76: grouped Spearman, running-peak drawdown
-        "q_agg_spearman", "q_win_drawdown",
-        // round-7 batch 77: CUSUM drift detection, vocab coverage curve
-        "q_ts_cusum", "q_text_coverage",
-        // round-7 batch 78: Durbin–Levinson PACF, PSI drift monitor
-        "q_ts_pacf", "q_profile_psi",
-        // round-7 batch 79: A-ES weighted sampling, exact betweenness
-        "q_sample_weighted", "q_graph_betweenness",
-        // round-7 batch 80: matrix-free PCA power step, FIFO matching
-        "q_vec_pca_power", "q_win_fifo",
-        // round-7 batch 81: residual boosting, WHT spectrogram
-        "q_ml_boost", "q_mm_spectrogram",
-        // round-7 batch 82: adaptive Kalman fold, per-file bloom index
-        "q_ts_kalman", "q_lake_bloom_index",
-        // round-7 batch 83: two-hop transitions. q_text_dedup_eval is
-        // deliberately NOT probed on this corpus since round 9 (the
-        // q_geo_dbscan precedent): banding-quality evaluation is
-        // TRUE-PAIR-driven by nature, and the key-shifted 10× staging
-        // is a 100%-dup-rate corpus — every doc a 10-clique — so the
-        // doc-level candidate∩truth joins are copies²-inflated
-        // (measured ~1000 s of pure staging artifact under the honest
-        // toRdd timing). Its scale row runs on the REGENERATED 100×
-        // corpus instead (constant dup rate; graft.ScaleProbe100).
-        "q_graph_walk2",
-        // round-7 batch 84: R/S Hurst exponent, dyadic decayed counters
-        "q_ts_hurst", "q_agg_decay",
-        // round-7 batch 85: MIPS-vs-cosine divergence, dynamic pruning
-        "q_sim_mips", "q_join_dpp",
-        // round-7 batch 86: zone-map skipping census, clipped-precision
-        // BLEU eval
-        "q_lake_zonemap", "q_text_bleu",
-        // round-7 batch 87: per-dim embedding stats, FD violation census
-        "q_vec_stats", "q_audit_fd",
-        // round-7 batch 88: 3-EMA MACD crossings, MMR diverse top-k
-        "q_ts_macd", "q_vec_mmr",
-        // round-7 batch 89: propose-accept matching, 8x8 block 2-D WHT
-        "q_graph_matching", "q_mm_blockwht",
-        // round-7 batch 90: Kaplan-Meier churn curve, Luby coloring
-        "q_ts_survival", "q_graph_coloring",
-        // round-7 batch 91: Lindley queue replay, MR secondary sort
-        "q_win_queue_replay", "q_mr_secondary_sort",
-        // round-7 batch 92: seasonal Holt-Winters, Lorenz deciles
-        "q_ts_holt_winters", "q_agg_lorenz",
-        // round-7 batch 93: relational division, merge-on-read deletes
-        "q_join_division", "q_lake_mor_deletes",
-        // round-7 batch 94: VARIANT typed extraction, 2-approx cover
-        "q_fn_variant", "q_graph_vertex_cover",
-        // round-7 batch 95: farthest-first k-center, cooldown debounce
-        "q_vec_kcenter", "q_win_debounce",
-        // round-7 batch 96: CUPED adjustment, empirical-Bayes shrinkage
-        "q_agg_cuped", "q_agg_bayes_shrink",
-        // round-7 batch 97: hierarchy rollup, acquisition split
-        "q_agg_hierarchy", "q_ts_new_returning",
-        // round-7 batch 98: filtered vector search, experiment layers
-        "q_sim_filtered_topk", "q_sample_layers",
-        // round-8 batch 99: exact range splits, logistic GD steps
-        "q_shard_range_splits", "q_ml_logreg_step",
-        // round-8 batch 100: entity-resolution blocking
-        "q_er_blocking",
-        // round-8 batch 101: the remaining OSDI §2.3 examples
-        "q_mr_url_freq", "q_mr_revlink", "q_mr_termvector",
-        // round-8 batch 102: ratio-metric delta-method variance
-        "q_agg_delta_method",
-        // round-8 batch 103: streaming CDC upsert state, conductance
-        "q_stream_upsert", "q_graph_conductance",
-        // round-8 batch 104: RRF hybrid retrieval, partition evolution
-        "q_sim_hybrid_rrf", "q_lake_partition_evolution",
-        // round-8 batch 105: k-fold CV model selection
-        "q_ml_cv_stump",
-        // round-8 batch 106: water-filling mix plan
-        "q_mix_plan",
-        // round-8 batch 107: gaps-and-islands, SRM guardrail
-        "q_win_gap_islands", "q_agg_srm",
-        // round-8 batch 108: embedded-newline CSV round-trip
-        "q_source_csv_multiline",
-        // round-8 batch 109: experiment power analysis
-        "q_agg_power",
-        // round-9 batch 110: open-layout export, AQE skew join
-        // (q_dedup_minhash_exact keeps its round-6 slot above — its
-        // round-9 group-collapse makes the 100%-dup 10× corpus the
-        // WORST case it now absorbs arithmetically)
-        "q_lake_export", "q_join_skew_aqe",
-        // round-10 batches 111-112: retrieval-eval tier (shared
-        // supplier-grain items relation — the corpus stage is one
-        // suppkey agg), token-budget curation (globalCumSum), dedup-
-        // aware mixing (exact-dup-grain window), winsorized mean
-        // (bounded-domain histogram), ROUGE (BLEU's pair machinery)
-        "q_ml_auc", "q_ml_avg_precision", "q_ml_ndcg", "q_ml_mrr",
-        "q_ml_roc_curve", "q_ml_lift_gains", "q_mix_token_budget",
-        "q_mix_dedup_weight", "q_agg_winsorized", "q_text_rouge",
-        // round-10 batch 114: frozen-centroid delta assignment,
-        // Neyman allocation, AR(1) fit+backtest
-        "q_sim_ann_incremental", "q_sample_neyman", "q_ts_ar1",
-        // round-10 batch 115: DetMath WoE/IV screen, chrF2
-        "q_ml_woe_iv", "q_text_chrf",
-        // round-11 batch 116: privacy/SDC family + Delta schema evolution
-        "q_priv_kanon", "q_priv_ldiv", "q_priv_clip", "q_priv_suppress",
-        "q_lake_delta_schema_evolution", "q_priv_pseudonym",
-        "q_mix_curriculum", "q_priv_dp_release")
-        // round-7 batch 48 (q_geo_dbscan) is deliberately NOT probed:
-        // the 10-way-duplicated probe corpus multiplies point density
-        // 10×, which is SUPERCRITICAL for the fixture-tuned (ε, minPts)
-        // — grid-cell occupancy rises 10×, candidate pairs rise ~100×
-        // (~500M; measured 77 GB of shuffle spill), and the clustering
-        // itself degenerates to one percolated blob. Density clustering
-        // cost is neighbor-pair-driven by nature; the scale evidence is
-        // the sf0.1 parity run (15k points, 216k core pairs, hook loop
-        // converged to the true single cluster) — see SCALING.md.
-        // optional args = probe only the named keys (batch re-probes)
-        if (args.isEmpty || args.contains(q))) {
+  }
+
+  def main(args: Array[String]): Unit = {
+    val usage = s"usage: ScaleProbe <copies> <key|probe>... (probes: ${Probes.mkString(", ")})"
+    require(args.length >= 2 && args(0).forall(_.isDigit) && args(0).toInt >= 1, usage)
+    val copies = args(0).toInt
+    val names = args.toSeq.drop(1)
+    val unknown = names.filterNot(n => Probes.contains(n) || Registry.queries.contains(n))
+    require(unknown.isEmpty, s"not a registry key or probe: ${unknown.mkString(", ")}; $usage")
+    val spark = Sessions.local()
+    lazy val dst: String = {
+      val dir = s"/tmp/graft_probe_x$copies"
+      stage(spark, dir, copies)
+      // warmup (mirrors Bench)
+      spark.read.parquet(s"$dir/lineitem.parquet")
+        .groupBy(col("l_returnflag")).count().count()
+      dir
+    }
+    def full(df: DataFrame): Long = df.queryExecution.toRdd.count()
+    /** Time one measurement; scoped intermediates are always released,
+      * shared relations only when `keepShared` is off. */
+    def timed(name: String, keepShared: Boolean = false)(body: => Long): Unit = {
       val t0 = System.nanoTime()
-      // toRdd.count(), not count() — full output schema, so a left-join
-      // census key cannot have its stats subtree join-eliminated out of
-      // the measurement (round 9, the Bench fix; q_dedup_embed and
-      // q_dedup_ngram rows published before round 9 under-measured)
-      val n = Registry.queries(q)(spark, dst).queryExecution.toRdd.count()
-      println(f"SCALE10 $q: ${(System.nanoTime()-t0)/1e9}%.2f s rows=$n")
-      // release BOTH lifetimes between probed queries (review r5): with
-      // shared relations resident, the first consumer would be billed
-      // for the whole shared build and later consumers would time a
-      // cache read — order-dependent numbers, not per-operator evidence
-      // (Bench's cold pass does the same)
-      graft.Caches.releaseScoped()
-      graft.Caches.releaseShared()
+      val n = body
+      println(f"SCALE${copies}x $name: ${(System.nanoTime() - t0) / 1e9}%.2f s rows=$n")
+      Caches.releaseScoped()
+      if (!keepShared) Caches.releaseShared()
+    }
+    // shared relation priced once, then its consumers run against it
+    def resident(shared: String, build: DataFrame, keys: Seq[String],
+        note: String): Unit = {
+      timed(shared, keepShared = true)(full(build))
+      for (q <- keys)
+        timed(s"$q ($note resident)", keepShared = true)(
+          full(Registry.queries(q)(spark, dst)))
+      Caches.releaseShared()
+    }
+    // chain forest: components of 150 nodes; both edge directions
+    def hookLoop(): Long = {
+      val nodes = 15000L * copies
+      val fwd = spark.range(nodes)
+        .filter(pmod(col("id"), lit(150)) =!= 0)
+        .select(col("id").as("u"), (col("id") - 1).as("v"))
+      val edges = fwd.unionByName(fwd.select(col("v").as("u"), col("u").as("v")))
+        .repartition(col("u"))
+      val lab = ops.Geo.contractedHookLabels(edges,
+        spark.range(nodes).select(col("id").as("node"), col("id").as("label")), 6, 6)
+      val n = lab.select(col("label")).distinct().count()
+      require(n == nodes / 150, s"expected ${nodes / 150} components, got $n")
+      lab.count()
+    }
+    for (name <- names) name match {
+      case "band_candidates" =>
+        resident("shared_band_candidates", ops.VecOps.bandCandidatesWithCos(spark, dst),
+          Seq("q_dedup_embed", "q_sim_threshold_join"), "shared")
+      case "mt_triple" =>
+        resident("shared_mt_pairs", ops.Text.sharedMtPairCensus(spark, dst),
+          Seq("q_text_bleu", "q_text_rouge", "q_text_chrf"), "census")
+      case "graph_regen" =>
+        val gdst = s"/tmp/graft_probe_x${copies}_graph"
+        replicate(spark, gdst, "lineitem", Seq("l_orderkey", "l_suppkey"), copies)
+        replicate(spark, gdst, "orders", Seq("o_orderkey", "o_custkey"), copies)
+        replicate(spark, gdst, "customer", Seq("c_custkey"), copies)
+        replicate(spark, gdst, "supplier", Seq("s_suppkey"), copies)
+        for (dim <- Seq("nation", "region", "part"))
+          replicate(spark, gdst, dim, Nil, 1)
+        for (q <- Seq("q_graph_pagerank", "q_graph_degree", "q_graph_scc",
+            "q_graph_hits", "q_graph_reciprocity"))
+          timed(s"$q (regen graph)")(full(Registry.queries(q)(spark, gdst)))
+      case "hook_loop" => timed("hook_loop_broadcast")(hookLoop())
+      case "hook_loop_fallback" =>
+        spark.conf.set("spark.graft.broadcastLabelLimit", "100000")
+        try timed("hook_loop_shufflehash")(hookLoop())
+        finally spark.conf.unset("spark.graft.broadcastLabelLimit")
+      case "component_loop" =>
+        timed("component_loop") {
+          val nodes = 20000L * copies
+          val fwd = spark.range(nodes)
+            .filter(pmod(col("id"), lit(4)) =!= 0)
+            .select(col("id").as("d1"), (col("id") - 1).as("d2"))
+          val edges = Caches.scoped(
+            fwd.unionByName(fwd.select(col("d2").as("d1"), col("d1").as("d2")))
+              .repartition(col("d2")))
+          val lab = ops.Pipeline.componentLabels(edges,
+            ops.Pipeline.componentVerts(edges), ops.Pipeline.componentRounds)
+          val n = lab.select(col("root")).distinct().count()
+          require(n == nodes / 4, s"expected ${nodes / 4} components, got $n")
+          lab.count()
+        }
+      case q => timed(q)(full(Registry.queries(q)(spark, dst)))
     }
     spark.stop()
   }

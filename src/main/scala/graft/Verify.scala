@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,31 +10,9 @@ object Verify {
     // is a pure function of sfDir) render for THIS corpus, so parity
     // holds at any scale factor, not just the driver's grading sf
     sys.props("graft.sf.dir") = sfDir
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
-    // dev-loop filter: SPARK_GRAFT_ONLY="q_a,q_b" dumps just those keys
-    // (the driver never sets it, so the graded path is unchanged)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-    // a mistyped SPARK_GRAFT_ONLY key silently dumped ZERO results and
-    // looked like a (vacuously) clean verify run (ADVICE r6)
-    only.foreach { o =>
-      val unknown = o -- SparkEntry.queries.keySet
-      if (unknown.nonEmpty) System.err.println(
-        s"[verify] SPARK_GRAFT_ONLY keys not in the registry: ${unknown.toSeq.sorted.mkString(", ")}")
-      require(selected.nonEmpty,
-        s"SPARK_GRAFT_ONLY matched no registered query (names: ${o.mkString(",")})")
-    }
+    val (_, selected) = Registry.selected("verify")
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.{Caches, QueryDef}
 import graft.Dsl._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -236,7 +236,7 @@ object Clustering {
     // distributed job (the gradient partial-agg over the cached feature
     // relation; measured 3.7 s → ~1.5 s at sf0.1) and nothing
     // corpus-sized ever leaves the executors.
-    var w = Array.fill(dims)(0L)
+    val w = Array.fill(dims)(0L)
     for (_ <- 1 to rounds) {
       val grads = scorePerceptron(feats, litW(feats, w))
         .select(col("n"), (col("y") - col("pred")).as("err"),
@@ -1499,7 +1499,7 @@ object Clustering {
         (pct(col("l_tax")) * 100).cast("long").as("x2"),
         when(pct(col("l_discount")) * 100 >= 5, 1L).otherwise(0L).as("y")))
       val n = base.count()
-      var w = Array(0L, 0L, 0L) // e6 fixed-point (intercept, x1, x2)
+      val w = Array(0L, 0L, 0L) // e6 fixed-point (intercept, x1, x2)
       def margin = lit(w(0)) + lit(w(1)) * col("x1") + lit(w(2)) * col("x2")
       // truncating division of a possibly-negative long column: Spark %
       // carries the dividend's sign, so (c − c % m)/m is exact and

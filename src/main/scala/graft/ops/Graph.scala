@@ -421,7 +421,6 @@ object Graph {
           .union(und.select(col("b").as("u"), col("a").as("n")))
           .repartition(col("n")))
       val nodes = Tables.nation(s, d).select(col("n_nationkey").as("u"))
-      val reliable = s.sparkContext.getCheckpointDir.isDefined
       var labels = nodes.withColumn("lbl", col("u"))
       for (_ <- 1 to lpaRounds) {
         val votes = sym
@@ -432,8 +431,7 @@ object Graph {
         val w = Window.partitionBy(col("u")).orderBy(descl("c"), ascf("lbl"))
         val frame = votes.withColumn("rn", row_number().over(w))
           .filter(col("rn") === 1).select(col("u"), col("lbl"))
-        labels = if (reliable) frame.checkpoint(true)
-                 else frame.localCheckpoint(true)
+        labels = truncateLineage(frame)
       }
       labels.groupBy(col("lbl"))
         .agg(count(lit(1)).as("n_members"), sum(col("u")).as("member_sum"))
@@ -689,8 +687,7 @@ object Graph {
     * survivor set, then a count — edges are shuffled into their layout
     * ONCE. The survivor frame is lineage-truncated per round (it feeds
     * two joins in the next round — unchecked, the plan doubles per
-    * iteration), reliable-checkpoint when a checkpoint dir is
-    * configured, localCheckpoint otherwise (the componentLabels tier).
+    * iteration) by Dsl.truncateLineage.
     * Production peeling runs the same loop delta-wise; the fixed-R
     * unroll is the cross-engine-gradeable form, and R=4 removes
     * pendant chains of length ≤ 4 — documented semantics, not a
@@ -703,7 +700,6 @@ object Graph {
     "q_graph_kcore",
     (s, d) => {
       val edges = Pipeline.componentEdges(s, d) // symmetrized (d1,d2)
-      val reliable = s.sparkContext.getCheckpointDir.isDefined
       def coreDeg(alive: org.apache.spark.sql.DataFrame) =
         edges
           .join(alive.select(col("node").as("au")), col("d1") === col("au"))
@@ -715,8 +711,7 @@ object Graph {
       for (_ <- 1 to 4) {
         val frame = coreDeg(alive).filter(col("deg") >= 2)
           .select(col("d1").as("node"))
-        alive = if (reliable) frame.checkpoint(true)
-                else frame.localCheckpoint(true)
+        alive = truncateLineage(frame)
       }
       val cd = coreDeg(alive)
       val docLang = Tables.documents(s, d)
@@ -964,7 +959,6 @@ object Graph {
       // round-overhead disease — measured 10.2 s vs pagerank's 0.6 s),
       // so the max runs as a single-partition window over the 25-row
       // frame and the state truncates lineage the LPA way
-      val reliable = s.sparkContext.getCheckpointDir.isDefined
       def normalize(raw: org.apache.spark.sql.DataFrame, out: String): org.apache.spark.sql.DataFrame = {
         import org.apache.spark.sql.expressions.Window
         val f = nodes.join(raw, Seq("node"), "left")
@@ -973,7 +967,7 @@ object Graph {
           .select(col("node"),
             expr("CAST(CAST(s AS DECIMAL(38,0)) * 1000000 div m AS BIGINT)")
               .as(out))
-        if (reliable) f.checkpoint(true) else f.localCheckpoint(true)
+        truncateLineage(f)
       }
       var hub: org.apache.spark.sql.DataFrame =
         nodes.select(col("node"), lit(1000000L).as("h"))

@@ -805,7 +805,6 @@ object Multimodal {
   private val mmWht = QueryDef(
     "q_mm_wht",
     (s, d) => {
-      import s.implicits._
       val feats = wavClips(s, d).mapPartitions(_.map { c =>
         val (sr, samples) = graft.functions.Codecs.Wav.decode(c.payload)
         if (samples.length < 8) WhtFeatures(c.media_id, sr,
@@ -1166,7 +1165,6 @@ object Multimodal {
   private val mmSpectrogram = QueryDef(
     "q_mm_spectrogram",
     (s, d) => {
-      import s.implicits._
       val feats = wavClips(s, d).flatMap { c =>
         val (sr, samples) = graft.functions.Codecs.Wav.decode(c.payload)
         val nf = samples.length / 8

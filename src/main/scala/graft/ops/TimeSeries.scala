@@ -1309,7 +1309,6 @@ object TimeSeries {
   private val period = QueryDef(
     "q_ts_period",
     (s, d) => {
-      val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
       val daily = graft.Caches.scoped(Tables.events(s, d)
         .select(col("event_type"),
           floorDiv(unix_micros(col("ts")), DayUs).as("day"))

@@ -623,7 +623,7 @@ object Lake {
     */
   private def writeDeltaCommit(stagedRoot: java.io.File, v: Long,
       addRels: Seq[String], removeRels: Seq[String],
-      metaAction: Option[String] = None): Unit = {
+      metaAction: Option[String]): Unit = {
     val now = System.currentTimeMillis()
     val removes = removeRels.map { rel =>
       s"""{"remove":{"path":"${escJson(rel)}",""" +

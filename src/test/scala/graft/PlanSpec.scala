@@ -544,12 +544,13 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.execution.window.WindowExec
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.{TakeOrderedAndProjectExec,
-      GlobalLimitExec, LocalLimitExec, CollectLimitExec}
+      GlobalLimitExec, CollectLimitExec}
+    // LocalLimitExec is deliberately not bounding: it caps rows per
+    // partition only, so under it a window still sees corpus-grain input
     def bounded(p: SparkPlan): Boolean = p match {
       case _: BaseAggregateExec => true
       case _: TakeOrderedAndProjectExec => true
       case _: GlobalLimitExec => true
-      case _: LocalLimitExec => true
       case _: CollectLimitExec => true
       case a: AdaptiveSparkPlanExec => bounded(a.executedPlan)
       case q: QueryStageExec => bounded(q.plan)

@@ -14,6 +14,17 @@ import org.apache.spark.sql.functions._
 class RuntimeSpec extends SparkSpec {
   import spark.implicits._
 
+  test("Sessions.local: UTC, FAIR, one shuffle partition per cpu, extensions loaded") {
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(spark.sparkContext.getSchedulingMode ==
+      org.apache.spark.scheduler.SchedulingMode.FAIR)
+    assert(spark.sparkContext.master == s"local[${SparkSpec.Cpus}]")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == SparkSpec.Cpus.toString)
+    // graft_dot only resolves if GraftExtensions was injected
+    assert(spark.sql("SELECT graft_dot(array(1L, 2L), array(3L, 4L))")
+      .head().getLong(0) == 11L)
+  }
+
   test("date-partitioned lake write prunes partitions on read") {
     val dir = Files.createTempDirectory("graft_lake").toString
     Lake.writeDatePartitioned(Tables.events(spark, sfDir), "ts", dir)
@@ -318,7 +329,6 @@ class RuntimeSpec extends SparkSpec {
       k -> spark.conf.getOption(k) }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
-      import spark.implicits._
       // key 0 carries 200k rows; keys 1..63 carry ~120 each — one
       // shuffle partition dwarfs the median
       val left = spark.range(200000).select(lit(0L).as("k"), col("id").as("p"))

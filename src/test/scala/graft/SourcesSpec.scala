@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** File-format round-trip edge cases the oracle can't see (the graded
   * keys run on the newline-free fixtures).
   */

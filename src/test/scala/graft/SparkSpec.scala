@@ -4,24 +4,13 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session fixture: one local SparkSession per suite, UTC, small
-  * shuffle-partition count (tiny fixtures; 200 partitions would be pure
+/** Shared session fixture: the production session ([[Sessions.local]])
+  * at a fixed 4 cpus, so test parallelism does not follow
+  * SPARK_GRAFT_CPUS (tiny fixtures; more partitions would be pure
   * scheduler overhead).
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    // FAIR like the standalone server mains, so ServerSpec's
-    // multi-client fairness test runs the production scheduling mode;
-    // semantics-neutral for every other suite (pools only exist where
-    // a test sets spark.scheduler.pool)
-    .config("spark.scheduler.mode", "FAIR")
-    .config("spark.ui.enabled", "false")
-    .appName(getClass.getSimpleName)
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(cpus = SparkSpec.Cpus)
 
   /** Smoke-scale fixtures (TESTDATA.md). */
   val sfDir = "/root/testdata/sf0.001"
@@ -30,4 +19,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     // Session is shared across suites in one forked JVM — do not stop it.
     super.afterAll()
   }
+}
+
+object SparkSpec {
+  val Cpus = 4
 }
