@@ -7,158 +7,103 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{ArrayType, LongType}
 
-import graft.functions.DotLongArrays
+import graft.functions.LongArrayKernel
 
 /** Session extension (`spark.sql.extensions=graft.GraftExtensions`) —
   * the SparkSessionExtensions integration path for the engine's native
   * Catalyst pieces:
   *
-  *  - `RewriteHofDotProduct`, an optimizer rule that recognizes the
-  *    engine-portable higher-order-function dot-product spelling
+  *  - `RewriteHofArrayKernel`, an optimizer rule that recognizes the
+  *    engine-portable higher-order-function spellings of the dot product
   *    `aggregate(zip_with(a, b, (p, q) -> p * q), 0L, (s, t) -> s + t)`
-  *    and replaces it with the codegen'd [[DotLongArrays]] primitive
+  *    and of the squared L2 distance (the k-means / IVF / PQ inner loop)
+  *    `aggregate(zip_with(a, b, (p, q) -> (p - q) * (p - q)), 0L, _+_)`
+  *    and replaces them with the codegen'd [[LongArrayKernel]] primitive
   *    loop. Queries keep the declarative spelling (which the DuckDB
   *    oracle mirrors verbatim), and the optimizer — not the query
   *    author — picks the fast physical form: the Catalyst analogue of
   *    "declare the plan, let the engine choose".
-  *  - `graft_dot`, the same expression registered as a SQL-callable
-  *    function for `spark.sql(...)` users.
-  *
-  * Soundness of the rewrite: [[DotLongArrays]] implements EXACTLY the
-  * HOF semantics (ascending-index summation; NULL on null array, null
-  * element, or length mismatch — zip_with null-pads the shorter side,
-  * poisoning the sum), so the rule only fires when both multiply
-  * operands are the zip lambda's own variables, the fold is `acc + elem`
-  * over literal 0L, the finish lambda is the identity, and multiply and
-  * add share one EvalMode — carried into the expression's `failOnError`
-  * (ANSI, Spark 4's default, overflow-raises via multiplyExact/addExact;
-  * LEGACY wraps; TRY is never rewritten). PlanSpec asserts both the
-  * rewrite firing and result equality against the interpreted HOF on
-  * real vectors, and that near-miss shapes survive untouched.
+  *  - `graft_dot` and `graft_sqdist`, the same expression registered as
+  *    SQL-callable functions for `spark.sql(...)` users.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectOptimizerRule(_ => RewriteHofDotProduct)
-    ext.injectOptimizerRule(_ => RewriteHofSqDist)
-    ext.injectFunction((
-      new FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotLongArrays].getName, "graft_dot"),
+    ext.injectOptimizerRule(_ => RewriteHofArrayKernel)
+    for (op <- LongArrayKernel.ops) ext.injectFunction((
+      new FunctionIdentifier(op.sqlName),
+      new ExpressionInfo(classOf[LongArrayKernel].getName, op.sqlName),
       (args: Seq[Expression]) => {
-        require(args.length == 2, "graft_dot(a, b) takes two arguments")
-        DotLongArrays(args.head, args(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_sqdist"),
-      new ExpressionInfo(classOf[functions.SumSqDiffLongArrays].getName,
-        "graft_sqdist"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "graft_sqdist(a, b) takes two arguments")
-        functions.SumSqDiffLongArrays(args.head, args(1))
+        require(args.length == 2, s"${op.sqlName}(a, b) takes two arguments")
+        LongArrayKernel(args.head, args(1), op)
       }))
   }
 }
 
-object RewriteHofDotProduct extends Rule[LogicalPlan] {
-
-  private def isLongArray(e: Expression): Boolean = e.dataType match {
-    case ArrayType(LongType, _) => true
-    case _ => false
-  }
-
-  /** The two multiply operands are exactly the two lambda variables
-    * (either order — multiplication commutes over the same element
-    * pair).
-    */
-  private def sameVars(f1: Expression, f2: Expression,
-      v1: NamedExpression, v2: NamedExpression): Boolean = (f1, f2) match {
-    case (a: NamedLambdaVariable, b: NamedLambdaVariable) =>
-      (a.exprId == v1.exprId && b.exprId == v2.exprId) ||
-        (a.exprId == v2.exprId && b.exprId == v1.exprId)
-    case _ => false
-  }
-
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    plan.transformAllExpressions {
-      case ArrayAggregate(
-            ZipWith(l, r,
-              LambdaFunction(mul @ Multiply(m1, m2, _), Seq(p, q), _)),
-            Literal(zero, LongType),
-            LambdaFunction(add @ Add(a1, a2, _), Seq(acc, elem), _),
-            LambdaFunction(fin: NamedLambdaVariable, Seq(finArg), _))
-          if zero == 0L && isLongArray(l) && isLongArray(r) &&
-            mul.evalMode == add.evalMode &&
-            (mul.evalMode == EvalMode.ANSI ||
-              mul.evalMode == EvalMode.LEGACY) &&
-            sameVars(m1, m2, p, q) && sameVars(a1, a2, acc, elem) &&
-            (finArg match {
-              case v: NamedLambdaVariable => v.exprId == fin.exprId
-              case _ => false
-            }) =>
-        DotLongArrays(l, r, failOnError = mul.evalMode == EvalMode.ANSI)
-    }
-}
-
-/** Optimizer rewrite for the squared-L2 HOF spelling — the k-means /
-  * IVF / PQ inner loop:
-  * `aggregate(zip_with(a, b, (p, q) -> (p - q) * (p - q)), 0L, _+_)` →
-  * [[graft.functions.SumSqDiffLongArrays]].
+/** Soundness of the rewrite: [[LongArrayKernel]] implements EXACTLY the
+  * HOF semantics (ascending-index summation; NULL on null array, null
+  * element, or length mismatch — zip_with null-pads the shorter side,
+  * poisoning the sum), so the rule only fires on the shell
+  * `ArrayAggregate(ZipWith(l, r, p, q -> m1 * m2), 0L, acc + elem,
+  * identity)` over BIGINT arrays — literal 0L seed, `acc + elem` in
+  * either order, identity finish — when the multiply picks an op:
   *
-  * Soundness mirrors [[RewriteHofDotProduct]]: the rule fires only when
-  * BOTH square factors are the SAME ordered difference of the zip
-  * lambda's own variables ((p−q)·(p−q) or (q−p)·(q−p) — mixed order
-  * (p−q)·(q−p) is the NEGATED square and is deliberately not matched),
-  * the fold is `acc + elem` over literal 0L with an identity finish,
-  * and subtract/multiply/add share one EvalMode (ANSI → overflow-exact
-  * intrinsics, LEGACY → wrapping; TRY never rewritten). PlanSpec pins
-  * the rewrite, interpreted-HOF equality, and near-miss survival.
+  *  - `Dot`: the operands are the zip lambda's own two variables (either
+  *    order — multiplication commutes over the same element pair);
+  *  - `SqDist`: both factors are the SAME ordered difference (p−q)·(p−q)
+  *    or (q−p)·(q−p). Mixed order (p−q)·(q−p) is the NEGATED square and
+  *    is deliberately not matched.
+  *
+  * Subtract, multiply and add must share one EvalMode, carried into the
+  * expression's `failOnError` (ANSI, Spark 4's default, overflow-raises
+  * via the *Exact intrinsics; LEGACY wraps; TRY is never rewritten).
+  * PlanSpec asserts the rewrite firing and result equality against the
+  * interpreted HOF on real vectors, and that near-miss shapes survive.
   */
-object RewriteHofSqDist extends Rule[LogicalPlan] {
+object RewriteHofArrayKernel extends Rule[LogicalPlan] {
+  import LongArrayKernel.{Dot, Op, SqDist}
 
   private def isLongArray(e: Expression): Boolean = e.dataType match {
     case ArrayType(LongType, _) => true
     case _ => false
   }
 
-  /** Both factors are the same ordered (v1−v2) or (v2−v1) difference of
-    * the two lambda variables — with matching EvalModes throughout.
-    */
-  private def sameSquare(f1: Expression, f2: Expression,
-      v1: NamedExpression, v2: NamedExpression,
-      mode: EvalMode.Value): Boolean = (f1, f2) match {
-    case (s1 @ Subtract(a1: NamedLambdaVariable, b1: NamedLambdaVariable, _),
-          s2 @ Subtract(a2: NamedLambdaVariable, b2: NamedLambdaVariable, _))
-        if s1.evalMode == mode && s2.evalMode == mode =>
-      val ordered = a1.exprId == a2.exprId && b1.exprId == b2.exprId
-      val isPQ = a1.exprId == v1.exprId && b1.exprId == v2.exprId
-      val isQP = a1.exprId == v2.exprId && b1.exprId == v1.exprId
-      ordered && (isPQ || isQP)
+  private def sameVar(e: Expression, v: NamedExpression): Boolean = e match {
+    case a: NamedLambdaVariable => a.exprId == v.exprId
     case _ => false
+  }
+
+  /** The two operands are exactly the two lambda variables, either order. */
+  private def sameVars(f1: Expression, f2: Expression,
+      v1: NamedExpression, v2: NamedExpression): Boolean =
+    (sameVar(f1, v1) && sameVar(f2, v2)) || (sameVar(f1, v2) && sameVar(f2, v1))
+
+  /** The op the multiply `m1 * m2` computes over the zip variables. */
+  private def kernelOp(m1: Expression, m2: Expression,
+      p: NamedExpression, q: NamedExpression,
+      mode: EvalMode.Value): Option[Op] = (m1, m2) match {
+    case _ if sameVars(m1, m2, p, q) => Some(Dot)
+    case (s1 @ Subtract(a1, b1, _), s2 @ Subtract(a2: NamedLambdaVariable,
+          b2: NamedLambdaVariable, _))
+        if s1.evalMode == mode && s2.evalMode == mode &&
+          sameVars(a1, b1, p, q) && sameVar(a1, a2) && sameVar(b1, b2) =>
+      Some(SqDist)
+    case _ => None
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformAllExpressions {
-      case ArrayAggregate(
+      case agg @ ArrayAggregate(
             ZipWith(l, r,
               LambdaFunction(mul @ Multiply(m1, m2, _), Seq(p, q), _)),
             Literal(zero, LongType),
             LambdaFunction(add @ Add(a1, a2, _), Seq(acc, elem), _),
-            LambdaFunction(fin: NamedLambdaVariable, Seq(finArg), _))
+            LambdaFunction(fin, Seq(finArg), _))
           if zero == 0L && isLongArray(l) && isLongArray(r) &&
             mul.evalMode == add.evalMode &&
             (mul.evalMode == EvalMode.ANSI ||
               mul.evalMode == EvalMode.LEGACY) &&
-            sameSquare(m1, m2, p, q, mul.evalMode) &&
-            ((a1, a2) match {
-              case (x: NamedLambdaVariable, y: NamedLambdaVariable) =>
-                (x.exprId == acc.exprId && y.exprId == elem.exprId) ||
-                  (x.exprId == elem.exprId && y.exprId == acc.exprId)
-              case _ => false
-            }) &&
-            (finArg match {
-              case v: NamedLambdaVariable => v.exprId == fin.exprId
-              case _ => false
-            }) =>
-        functions.SumSqDiffLongArrays(l, r,
-          failOnError = mul.evalMode == EvalMode.ANSI)
+            sameVars(a1, a2, acc, elem) && sameVar(fin, finArg) =>
+        kernelOp(m1, m2, p, q, mul.evalMode).fold[Expression](agg)(op =>
+          LongArrayKernel(l, r, op, failOnError = mul.evalMode == EvalMode.ANSI))
     }
 }

@@ -90,33 +90,33 @@ object Dsl {
   def descl(c: Column): Column = c.desc_nulls_last
   def descl(name: String): Column = col(name).desc_nulls_last
 
-  /** Distributed exact `ntile(k) OVER (ORDER BY sortCols)` (VERDICT r7
-    * #1). Spark plans a partitionBy-less window as ONE task holding the
-    * whole relation — fine on value-bounded inputs, a scale-killer on a
-    * corpus. This helper reproduces the ntile result bit-for-bit with no
-    * single-partition stage, so oracle SQL can keep the plain `ntile(k)
-    * OVER (ORDER BY ...)` spelling:
+  /** The global-prefix machinery behind [[globalNtile]],
+    * [[globalRowNumber]] and [[globalCumSum]] (VERDICT r7 #1). Spark
+    * plans a partitionBy-less window as ONE task holding the whole
+    * relation — fine on value-bounded inputs, a scale-killer on a
+    * corpus. This computes the running total of `weight` in the total
+    * order `sortCols` with no single-partition stage:
     *
     *   1. `repartitionByRange(parts, sortCols)` — a sampled range
     *      exchange; partition i holds a contiguous slice of the total
-    *      order (RangePartitioner sampling is seeded deterministically,
-    *      so the two jobs below see identical boundaries).
-    *   2. per-partition row counts (32-row relation) → running-sum
-    *      prefix offsets + grand total N, via a window over the COUNTS
-    *      relation (value-bounded: ≤ parts rows).
-    *   3. global rank = broadcast-joined prefix offset + local
-    *      `row_number` within the range partition (the only window over
-    *      corpus rows is partitioned by `spark_partition_id()`).
-    *   4. ntile arithmetic on (rank, N): with q = N div k, rem = N % k,
-    *      the first rem tiles take q+1 rows — exactly Spark's and
-    *      DuckDB's ntile. Requires sortCols to be a total order (no
-    *      ties), which every call site guarantees with a PK suffix.
+    *      order.
+    *   2. per-partition weight totals (a `parts`-row relation) →
+    *      running-sum prefix offsets + grand total N, via a window over
+    *      the TOTALS relation (value-bounded: ≤ parts rows).
+    *   3. `__gp_r` = broadcast-joined prefix offset + the local running
+    *      weight within the range partition (the only window over
+    *      corpus rows is partitioned by `spark_partition_id()`);
+    *      `__gp_n` = N.
+    *
+    * Requires sortCols to be a total order (ROWS ≡ RANGE only without
+    * ties), which every call site guarantees with a PK suffix. Returns
+    * df's columns plus `out` = `value`, an expression over `__gp_r` and
+    * `__gp_n`.
     */
-  def globalNtile(df: org.apache.spark.sql.DataFrame, k: Int, out: String,
-      sortCols: Seq[Column]): DataFrame = {
+  private def globalPrefix(df: DataFrame, parts: Int, weight: Column,
+      sortCols: Seq[Column], out: String, value: Column): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val parts = math.max(k, 32)
-    // Persisted (scoped lifetime): the COUNTS job and the RANK job must
+    // Persisted (scoped lifetime): the TOTALS job and the RANK job must
     // observe the SAME range boundaries, but RangePartitioner samples
     // its boundaries from the input's physical layout — and when the
     // input itself contains AQE-replanned shuffles, two independent
@@ -125,93 +125,57 @@ object Dsl {
     // this persist). A production layout rewrite materializes this
     // staged sort anyway — it IS the output being written.
     val parted = Caches.scoped(df.repartitionByRange(parts, sortCols: _*)
-      .withColumn("__gnt_pid", spark_partition_id()))
-    val counts = parted.groupBy(col("__gnt_pid"))
-      .agg(count(lit(1)).as("__gnt_cnt"))
-    val wOff = Window.orderBy(col("__gnt_pid").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wAll = Window.orderBy(col("__gnt_pid").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val offsets = counts
-      .withColumn("__gnt_off",
-        coalesce(sum(col("__gnt_cnt")).over(wOff), lit(0L)))
-      .withColumn("__gnt_n", sum(col("__gnt_cnt")).over(wAll))
-      .select(col("__gnt_pid"), col("__gnt_off"), col("__gnt_n"))
-    val tile =
-      s"""CASE WHEN __gnt_r <= ((__gnt_n div ${k}L) + 1L) * (__gnt_n % ${k}L)
-         |  THEN CAST((__gnt_r - 1L) div ((__gnt_n div ${k}L) + 1L) + 1L AS INT)
-         |  ELSE CAST((__gnt_n % ${k}L)
-         |    + (__gnt_r - 1L - ((__gnt_n div ${k}L) + 1L) * (__gnt_n % ${k}L))
-         |      div (__gnt_n div ${k}L) + 1L AS INT)
-         |END""".stripMargin
+      .withColumn("__gp_pid", spark_partition_id()))
+    val byPid = Window.orderBy(col("__gp_pid").asc)
+    val offsets = parted.groupBy(col("__gp_pid"))
+      .agg(sum(weight).as("__gp_w"))
+      .withColumn("__gp_off", coalesce(sum(col("__gp_w")).over(
+        byPid.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      .withColumn("__gp_n", sum(col("__gp_w")).over(
+        byPid.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+      .select(col("__gp_pid"), col("__gp_off"), col("__gp_n"))
     parted
-      .withColumn("__gnt_rn", row_number().over(
-        Window.partitionBy(col("__gnt_pid")).orderBy(sortCols: _*)))
-      .join(broadcast(offsets), Seq("__gnt_pid"))
-      .withColumn("__gnt_r", col("__gnt_off") + col("__gnt_rn"))
-      .withColumn(out, expr(tile))
+      .withColumn("__gp_run", sum(weight).over(
+        Window.partitionBy(col("__gp_pid")).orderBy(sortCols: _*)
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .join(broadcast(offsets), Seq("__gp_pid"))
+      .withColumn("__gp_r", col("__gp_off") + col("__gp_run"))
+      .withColumn(out, value)
       .select(df.columns.map(col).toIndexedSeq :+ col(out): _*)
   }
 
-  /** Distributed exact `row_number() OVER (ORDER BY sortCols)` — the
-    * third member of the globalNtile family: range exchange →
-    * per-partition counts → broadcast prefix offsets + local
-    * row_number. Same total-order and persist requirements as
-    * globalNtile (which computes exactly this rank internally before
-    * the tile arithmetic).
+  /** Distributed exact `ntile(k) OVER (ORDER BY sortCols)` over
+    * [[globalPrefix]]'s global rank r and row count N, so oracle SQL can
+    * keep the plain `ntile(k) OVER (ORDER BY ...)` spelling: with
+    * q = N div k, rem = N % k, the first rem tiles take q+1 rows —
+    * exactly Spark's and DuckDB's ntile.
     */
-  def globalRowNumber(df: org.apache.spark.sql.DataFrame, out: String,
+  def globalNtile(df: DataFrame, k: Int, out: String,
       sortCols: Seq[Column]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val parted = Caches.scoped(df.repartitionByRange(32, sortCols: _*)
-      .withColumn("__grn_pid", spark_partition_id()))
-    val counts = parted.groupBy(col("__grn_pid"))
-      .agg(count(lit(1)).as("__grn_cnt"))
-    val wOff = Window.orderBy(col("__grn_pid").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = counts
-      .withColumn("__grn_off",
-        coalesce(sum(col("__grn_cnt")).over(wOff), lit(0L)))
-      .select(col("__grn_pid"), col("__grn_off"))
-    parted
-      .withColumn("__grn_rn", row_number().over(
-        Window.partitionBy(col("__grn_pid")).orderBy(sortCols: _*)))
-      .join(broadcast(offsets), Seq("__grn_pid"))
-      .withColumn(out, col("__grn_off") + col("__grn_rn"))
-      .select(df.columns.map(col).toIndexedSeq :+ col(out): _*)
+    val tile =
+      s"""CASE WHEN __gp_r <= ((__gp_n div ${k}L) + 1L) * (__gp_n % ${k}L)
+         |  THEN CAST((__gp_r - 1L) div ((__gp_n div ${k}L) + 1L) + 1L AS INT)
+         |  ELSE CAST((__gp_n % ${k}L)
+         |    + (__gp_r - 1L - ((__gp_n div ${k}L) + 1L) * (__gp_n % ${k}L))
+         |      div (__gp_n div ${k}L) + 1L AS INT)
+         |END""".stripMargin
+    globalPrefix(df, math.max(k, 32), lit(1L), sortCols, out, expr(tile))
   }
+
+  /** Distributed exact `row_number() OVER (ORDER BY sortCols)`: the
+    * [[globalPrefix]] running count.
+    */
+  def globalRowNumber(df: DataFrame, out: String,
+      sortCols: Seq[Column]): DataFrame =
+    globalPrefix(df, 32, lit(1L), sortCols, out, col("__gp_r"))
 
   /** Distributed exact running sum — `sum(valueCol) OVER (ORDER BY
-    * sortCols ROWS UNBOUNDED PRECEDING..CURRENT ROW)` with no
-    * single-partition window (the globalNtile machinery applied to a
-    * prefix SUM): range exchange → per-partition value sums → broadcast
-    * prefix offsets → within-partition running sum + offset. Requires
-    * sortCols to be a total order (ROWS ≡ RANGE only without ties);
-    * every call site guarantees it with a PK suffix. The staged
-    * relation is persisted for the same two-job boundary-consistency
-    * reason globalNtile documents.
+    * sortCols ROWS UNBOUNDED PRECEDING..CURRENT ROW)`: the
+    * [[globalPrefix]] running total of `valueCol`.
     */
-  def globalCumSum(df: org.apache.spark.sql.DataFrame, valueCol: String,
-      out: String, sortCols: Seq[Column]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val parted = Caches.scoped(df.repartitionByRange(32, sortCols: _*)
-      .withColumn("__gcs_pid", spark_partition_id()))
-    val sums = parted.groupBy(col("__gcs_pid"))
-      .agg(sum(col(valueCol)).as("__gcs_sum"))
-    val wOff = Window.orderBy(col("__gcs_pid").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = sums
-      .withColumn("__gcs_off",
-        coalesce(sum(col("__gcs_sum")).over(wOff), lit(0L)))
-      .select(col("__gcs_pid"), col("__gcs_off"))
-    parted
-      .withColumn("__gcs_run", sum(col(valueCol)).over(
-        Window.partitionBy(col("__gcs_pid")).orderBy(sortCols: _*)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .join(broadcast(offsets), Seq("__gcs_pid"))
-      .withColumn(out, col("__gcs_off") + col("__gcs_run"))
-      .select(df.columns.map(col).toIndexedSeq :+ col(out): _*)
-  }
+  def globalCumSum(df: DataFrame, valueCol: String,
+      out: String, sortCols: Seq[Column]): DataFrame =
+    globalPrefix(df, 32, col(valueCol), sortCols, out, col("__gp_r"))
 
   /** Broadcast a label-sized pointer map only while it is driver-safe
     * (VERDICT r7 #8). At fixture scale the doubling maps of the
@@ -230,6 +194,49 @@ object Dsl {
       .getOption("spark.graft.broadcastLabelLimit")
       .map(_.toLong).getOrElse(2000000L)
     if (rows <= limit) broadcast(m) else m.hint("shuffle_hash")
+  }
+
+  /** One Borůvka hook-and-compress step of the label loops
+    * (q_geo_dbscan's contracted hooking, q_graph_mst). `hooks` holds one
+    * (l, m) row per hooking label: l hooks onto m. `lab` is the
+    * (node, label) state.
+    *
+    *   1. A mutual pair (l→m and m→l) is the only cycle min-hooking can
+    *      form; it resolves by rooting the smaller label.
+    *   2. The l→p map over every live label (non-hooking labels map to
+    *      themselves) is stats/lineage-truncated — the doubling chain
+    *      scans it at 2^J leaves, sane only when each leaf is an
+    *      in-memory scan — and counted once: the l set, so the row
+    *      count, is invariant across the jumps.
+    *   3. `jumps` pointer jumps p ← p(p), each map join broadcast only
+    *      while driver-safe ([[maybeBroadcastMap]]).
+    *   4. `lab` is relabelled through the jumped map and truncated.
+    *
+    * Returns the new labels, the jumped map (for callers that rewrite
+    * more state onto the new labels) and its row count.
+    */
+  def hookAndCompress(lab: DataFrame, hooks: DataFrame,
+      jumps: Int): (DataFrame, DataFrame, Long) = {
+    val p1 = hooks
+      .join(hooks.select(col("l").as("yl"), col("m").as("ym")),
+        col("m") === col("yl"), "left")
+      .select(col("l"),
+        when(col("ym") === col("l") && col("l") < col("m"), col("l"))
+          .otherwise(col("m")).as("p"))
+    var map = statsTruncate(lab.select(col("label").as("l")).distinct()
+      .join(p1, Seq("l"), "left")
+      .select(col("l"), coalesce(col("p"), col("l")).as("p")))
+    val rows = map.count()
+    for (_ <- 1 to jumps) {
+      map = map
+        .join(maybeBroadcastMap(map.select(col("l").as("l2"),
+          col("p").as("p2")), rows), col("p") === col("l2"))
+        .select(col("l"), col("p2").as("p"))
+    }
+    val relabelled = statsTruncate(
+      lab.join(maybeBroadcastMap(map, rows), lab("label") === map("l"))
+        .select(col("node"), col("p").as("label")))
+    (relabelled, map, rows)
   }
 
   /** Eager lineage truncation for iterative loops. If the application

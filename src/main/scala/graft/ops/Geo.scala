@@ -240,9 +240,10 @@ object Geo {
     * deduplicated) after every hook round, so it shrinks geometrically —
     * without contraction the rounds each re-join the full node-pair
     * relation and the 10× probe ran past 10 min; with it, only round 1
-    * touches edge-sized data. Label state is stats/lineage-truncated
-    * per round; the doubling map broadcasts only while driver-safe
-    * (Dsl.maybeBroadcastMap, VERDICT r7 #8).
+    * touches edge-sized data. Each round is one `Dsl.hookAndCompress`
+    * step (truncated label state, doubling map broadcast only while
+    * driver-safe, VERDICT r7 #8), whose jumped map then rewrites the
+    * edges.
     */
   private[graft] def contractedHookLabels(
       edges0: org.apache.spark.sql.DataFrame,
@@ -258,36 +259,11 @@ object Geo {
     // probe, and it saves the ~6 tiny jobs a dead round still costs.
     while (round < rounds && !edgesR.isEmpty) {
       round += 1
-      val hooks = edgesR.groupBy(col("u").as("la"))
-        .agg(min(col("v")).as("m"))
-      val p1 = hooks
-        .join(hooks.select(col("la").as("yl"), col("m").as("ym")),
-          col("m") === col("yl"), "left")
-        .select(col("la").as("l"),
-          when(col("ym") === col("la") && col("la") < col("m"), col("la"))
-            .otherwise(col("m")).as("p"))
-      var map = graft.Dsl.statsTruncate(
-        lab.select(col("label").as("l")).distinct()
-          .join(p1, Seq("l"), "left")
-          .select(col("l"), coalesce(col("p"), col("l")).as("p")))
-      // one row per live label, invariant across the jumps (the l set
-      // never changes within a round) — count once on the truncated
-      // frame, then broadcast only while driver-safe (VERDICT r7 #8:
-      // above spark.graft.broadcastLabelLimit the joins fall back to
-      // shuffle-hash, so a percolated 100× core graph cannot overflow
-      // the driver; RuntimeSpec pins both plans)
-      val mapRows = map.count()
+      val (relabelled, map, mapRows) = graft.Dsl.hookAndCompress(lab,
+        edgesR.groupBy(col("u").as("l")).agg(min(col("v")).as("m")), jumps)
+      lab = relabelled
       def bcm(m: org.apache.spark.sql.DataFrame) =
         graft.Dsl.maybeBroadcastMap(m, mapRows)
-      for (_ <- 1 to jumps) {
-        map = map
-          .join(bcm(map.select(col("l").as("l2"), col("p").as("p2"))),
-            col("p") === col("l2"))
-          .select(col("l"), col("p2").as("p"))
-      }
-      lab = graft.Dsl.statsTruncate(
-        lab.join(bcm(map), lab("label") === map("l"))
-          .select(col("node"), col("p").as("label")))
       edgesR = graft.Dsl.statsTruncate(edgesR
         .join(bcm(map.select(col("l").as("ul"), col("p").as("pu"))),
           col("u") === col("ul"))

@@ -1358,10 +1358,7 @@ object Lakehouse {
       d: String): String =
     importRoots.computeIfAbsent(s"${graft.Caches.sessionKey(s)}:$d", _ => {
       val base = s"/tmp/graft_lake_import/${corpusTag(d)}"
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(base))
+      graft.sources.AtomicDir.rm(new java.io.File(base))
       val ext = importExternalDir(d)
       // a deterministic slice a foreign engine might have produced:
       // every 7th order, month-partitioned, written by the stock writer
@@ -1525,10 +1522,7 @@ object Lakehouse {
       val root = java.nio.file.Files
         .createTempDirectory("graft_chain_lake").toString + "/orders"
       val dest = chainDest(d)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(dest))
+      graft.sources.AtomicDir.rm(new java.io.File(dest))
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_custkey"),
           date_trunc("month", col("o_orderdate")).as("o_orderdate"))
@@ -1615,10 +1609,7 @@ object Lakehouse {
       val root = java.nio.file.Files
         .createTempDirectory("graft_ckpt_lake").toString + "/orders"
       val dest = ckptDest(d)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(dest))
+      graft.sources.AtomicDir.rm(new java.io.File(dest))
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_custkey"),
           date_trunc("month", col("o_orderdate")).as("o_orderdate"))
@@ -1752,10 +1743,7 @@ object Lakehouse {
       val root = java.nio.file.Files
         .createTempDirectory("graft_evo_lake").toString + "/orders"
       val dest = evoDest(d)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(dest))
+      graft.sources.AtomicDir.rm(new java.io.File(dest))
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_custkey"),
           date_trunc("month", col("o_orderdate")).as("o_orderdate"))

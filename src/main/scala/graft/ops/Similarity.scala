@@ -707,8 +707,8 @@ object Similarity {
     * avalanche-mixed, seed space j=100.. disjoint from the 16 LSH
     * planes) and shipped as the SAME literal array into both engines,
     * and each output component is one exact int64 dot product — the
-    * codegen'd `DotLongArrays` on the Spark side, `list_sum` over the
-    * literal on the oracle side. No doubles anywhere.
+    * codegen'd `LongArrayKernel` dot on the Spark side, `list_sum` over
+    * the literal on the oracle side. No doubles anywhere.
     *
     * Shape at 100 TB: embarrassingly-parallel per-row work — 16 fused
     * dot products inside one codegen stage, no explode, no join, no
@@ -1456,7 +1456,7 @@ object Similarity {
     * TakeOrderedAndProject — per-partition top-k + merge, no global
     * sort); the rank windows and the fusion join run on ≤100-row
     * relations; the corpus-sized work is one token scan and one dot
-    * scan (the DotLongArrays codegen path).
+    * scan (the LongArrayKernel codegen path).
     *
     * Determinism: integer tf/dot ranks with id tiebreaks; RRF
     * contributions are truncating divs of positive ints; final top-20

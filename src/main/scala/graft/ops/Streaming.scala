@@ -366,11 +366,8 @@ object Streaming {
   // the temp dirs accumulated under /tmp for the life of a resident
   // server; the memo map itself stays process-lifetime by design)
   locally {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
     java.lang.Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      upsertRoots.forEach(r => rm(new java.io.File(r)))))
+      upsertRoots.forEach(r => graft.sources.AtomicDir.rm(new java.io.File(r)))))
   }
 
   /** Run the real streaming CDC upsert once per (session, sfDir): a

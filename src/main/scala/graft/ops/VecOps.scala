@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.LongArrayKernel
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -28,7 +29,7 @@ private[graft] object VecOps {
     * the aggregate/zip_with HOF formulation it replaced).
     */
   def dot(a: Column, b: Column): Column =
-    graft.functions.DotLongArrays.of(a, b)
+    LongArrayKernel.of(LongArrayKernel.Dot)(a, b)
 
   /** cosine from exact int dot/norms — identical formula in the oracle. */
   def cosine(dotc: Column, na: Column, nb: Column): Column =
@@ -56,7 +57,7 @@ private[graft] object VecOps {
     * native dot product.
     */
   def hyperSig(v: Column): Column = (0 until 16).map(j =>
-    when(graft.functions.DotLongArrays.of(v, typedlit(hyperPlane(j))) > 0,
+    when(dot(v, typedlit(hyperPlane(j))) > 0,
       lit(1L << j)).otherwise(lit(0L))).reduce(_ + _)
 
   /** The four 4-bit bands of a signature, as an array column. */

@@ -1,5 +1,6 @@
 package graft.server
 
+import graft.Json
 import org.apache.spark.sql.SparkSession
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
@@ -75,16 +76,6 @@ final class HttpEndpoint(spark: SparkSession, outRoot: String,
   /** The bound port (pass port=0 to let the OS pick a free one). */
   def boundPort: Int = http.getAddress.getPort
 
-  private def esc(s: String): String = s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
   private def respond(ex: HttpExchange, code: Int, body: String,
       contentType: String = "application/json"): Unit = {
     val bytes = body.getBytes(UTF_8)
@@ -112,7 +103,7 @@ final class HttpEndpoint(spark: SparkSession, outRoot: String,
         scala.util.Try(raw.toInt).toOption.filter(_ >= 0) match {
           case Some(v) => Right(math.min(v, cap))
           case None => Left(
-            s"""{"error":"$name must be a non-negative integer, got: ${esc(raw)}"}""")
+            s"""{"error":"$name must be a non-negative integer, got: ${Json.esc(raw)}"}""")
         }
     }
 
@@ -130,9 +121,9 @@ final class HttpEndpoint(spark: SparkSession, outRoot: String,
     case srv.Running   => s"""{"id":$id,"state":"RUNNING"}"""
     case srv.Cancelled => s"""{"id":$id,"state":"CANCELLED"}"""
     case d: srv.Done   =>
-      s"""{"id":$id,"state":"DONE","rows":${d.rows},"path":"${esc(d.resultPath)}"}"""
+      s"""{"id":$id,"state":"DONE","rows":${d.rows},"path":"${Json.esc(d.resultPath)}"}"""
     case f: srv.Failed =>
-      s"""{"id":$id,"state":"FAILED","error":"${esc(f.error)}"}"""
+      s"""{"id":$id,"state":"FAILED","error":"${Json.esc(f.error)}"}"""
   }
 
   /** Route one request; any handler bug degrades to a 500 on THAT
@@ -155,7 +146,7 @@ final class HttpEndpoint(spark: SparkSession, outRoot: String,
         val client = queryParam(ex, "client").getOrElse("default")
         try respond(ex, 200, s"""{"id":${srv.submit(body, sf, client)}}""")
         catch { case e: IllegalArgumentException =>
-          respond(ex, 400, s"""{"error":"${esc(e.getMessage)}"}""") }
+          respond(ex, 400, s"""{"error":"${Json.esc(e.getMessage)}"}""") }
       case ("POST", "/v1/sql") =>
         val client = queryParam(ex, "client").getOrElse("default")
         respond(ex, 200, s"""{"id":${srv.submitSql(body, sf, client)}}""")
@@ -216,7 +207,7 @@ final class HttpEndpoint(spark: SparkSession, outRoot: String,
         respond(ex, 404, s"""{"error":"no route: $method $path"}""")
     }
   } catch { case scala.util.control.NonFatal(e) =>
-    try respond(ex, 500, s"""{"error":"${esc(String.valueOf(e))}"}""")
+    try respond(ex, 500, s"""{"error":"${Json.esc(String.valueOf(e))}"}""")
     catch { case scala.util.control.NonFatal(_) => ex.close() }
   }
 

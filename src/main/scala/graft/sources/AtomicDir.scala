@@ -67,7 +67,8 @@ object AtomicDir {
     */
   @volatile private[graft] var midSwapHook: java.io.File => Unit = _ => ()
 
-  private def rm(f: java.io.File): Unit = {
+  /** Recursive delete; a missing path is a no-op. */
+  private[graft] def rm(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
   }
 

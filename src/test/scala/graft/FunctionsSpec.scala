@@ -1,10 +1,13 @@
 package graft
 
-import graft.functions.DotLongArrays
+import graft.functions.LongArrayKernel
+import graft.functions.LongArrayKernel.{Dot, SqDist}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftx.Bridge
 
-/** The native codegen'd dot product must be bit-identical to the
-  * portable HOF formulation on real vectors, nulls, and length skew.
+/** The native codegen'd array kernels must be bit-identical to the
+  * portable HOF formulations on real vectors, nulls, and length skew.
   */
 class FunctionsSpec extends SparkSpec {
   import spark.implicits._
@@ -13,41 +16,79 @@ class FunctionsSpec extends SparkSpec {
     aggregate(zip_with(col(a), col(b), (x, y) => x * y),
       lit(0L), (acc, x) => acc + x)
 
-  test("DotLongArrays == aggregate/zip_with on quantized embeddings") {
+  private def hofSqDist = (a: String, b: String) =>
+    aggregate(zip_with(col(a), col(b), (x, y) => (x - y) * (x - y)),
+      lit(0L), (acc, x) => acc + x)
+
+  test("LongArrayKernel dot == aggregate/zip_with on quantized embeddings") {
     val emb = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"),
         transform(col("embedding"),
           x => round(x.cast("double") * 1000000, 0).cast("long")).as("v"))
     val diff = emb
-      .select(DotLongArrays.of(col("v"), col("v")).as("native"),
+      .select(LongArrayKernel.of(Dot)(col("v"), col("v")).as("native"),
         hofDot("v", "v").as("hof"))
       .filter(col("native") =!= col("hof"))
       .count()
     assert(diff == 0)
   }
 
-  test("DotLongArrays handles nulls and unequal lengths") {
-    // HOF-aligned semantics (r6, required by RewriteHofDotProduct): a
+  test("LongArrayKernel handles nulls and unequal lengths (dot and sqdist)") {
+    // HOF-aligned semantics (r6, required by RewriteHofArrayKernel): a
     // length mismatch nulls the result — zip_with pads the shorter side
-    // with nulls and the null product poisons the sum — as does a null
+    // with nulls and the null term poisons the sum — as does a null
     // array or element
     val df = Seq(
-      (Seq(1L, 2L, 3L), Seq(4L, 5L, 6L)),   // 32
+      (Seq(1L, 2L, 3L), Seq(4L, 5L, 6L)),   // dot 32, sqdist 27
       (Seq(1L, 2L), Seq(10L, 10L, 99L)))     // mismatch: null
       .toDF("a", "b")
-    val vals = df.select(DotLongArrays.of(col("a"), col("b")).as("d"))
-      .collect().map(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
-      .toSeq
-    assert(vals == Seq(Some(32L), None))
-    val withNull = df.select(
-      DotLongArrays.of(lit(null).cast("array<bigint>"), col("b")))
-      .collect().map(_.isNullAt(0)).toSeq
-    assert(withNull == Seq(true, true))
-    // matches the HOF spelling row-for-row, null included
-    val both = df.select(DotLongArrays.of(col("a"), col("b")).as("n"),
-        hofDot("a", "b").as("h"))
-      .collect().map(r => (r.isNullAt(0), r.isNullAt(1))).toSeq
-    assert(both == Seq((false, false), (true, true)))
+    for ((op, hof, full) <- Seq((Dot, hofDot, 32L), (SqDist, hofSqDist, 27L))) {
+      val kernel = LongArrayKernel.of(op) _
+      val vals = df.select(kernel(col("a"), col("b")).as("d"))
+        .collect().map(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
+        .toSeq
+      assert(vals == Seq(Some(full), None), op)
+      val withNull = df.select(
+        kernel(lit(null).cast("array<bigint>"), col("b")))
+        .collect().map(_.isNullAt(0)).toSeq
+      assert(withNull == Seq(true, true), op)
+      val nullElem = df.select(
+        kernel(array(lit(1L), lit(null).cast("bigint"), lit(3L)), col("b")))
+        .collect().map(_.isNullAt(0)).toSeq
+      assert(nullElem == Seq(true, true), op)
+      // matches the HOF spelling row-for-row, null included
+      val both = df.select(kernel(col("a"), col("b")).as("n"),
+          hof("a", "b").as("h"))
+        .collect().map(r => (r.isNullAt(0), r.isNullAt(1))).toSeq
+      assert(both == Seq((false, false), (true, true)), op)
+    }
+  }
+
+  test("LongArrayKernel raises on int64 overflow under ANSI (dot and sqdist)") {
+    // the ANSI kernel (what the rewrite builds under Spark 4's default
+    // EvalMode) must fail loudly where the HOF would, on both the
+    // codegen path (a plain projection over a non-foldable input) and
+    // the interpreted path (inside a higher-order lambda)
+    val big = spark.range(1).select(
+      array(col("id") + lit(Long.MaxValue)).as("a"),
+      array(col("id") + lit(Long.MaxValue - 4000000000L)).as("b"))
+    def raises(c: Column): Boolean = {
+      val e = intercept[Exception](big.select(c).collect())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[ArithmeticException])
+    }
+    for ((op, hof) <- Seq((Dot, hofDot), (SqDist, hofSqDist))) {
+      def ansi(x: Column, y: Column): Column = Bridge.column(LongArrayKernel(
+        Bridge.expression(x), Bridge.expression(y), op, failOnError = true))
+      assert(raises(ansi(col("a"), col("b"))), s"$op codegen path")
+      assert(raises(transform(col("a"), x => ansi(array(x), col("b")))),
+        s"$op interpreted path")
+      // the HOF spelling is rewritten to the ANSI kernel and raises too
+      val rewritten = big.select(hof("a", "b"))
+      assert(rewritten.queryExecution.optimizedPlan.toString
+        .contains(op.sqlName), s"$op not rewritten")
+      assert(raises(hof("a", "b")), s"$op rewritten HOF")
+    }
   }
 
   test("WAV codec round-trips PCM16 and rejects malformed containers") {

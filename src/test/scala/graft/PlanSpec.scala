@@ -249,7 +249,7 @@ class PlanSpec extends SparkSpec {
       """aggregate(zip_with(v, v, (p, q) -> p * q),
         |  bigint(0), (acc, t) -> acc + t)""".stripMargin).as("dot"))
     val opt = df.queryExecution.optimizedPlan.toString
-    assert(opt.toLowerCase.contains("dotlongarrays"),
+    assert(opt.toLowerCase.contains("graft_dot"),
       s"HOF dot not rewritten:\n$opt")
     // result equality: the rewritten plan matches a plain-Scala dot
     val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -278,13 +278,13 @@ class PlanSpec extends SparkSpec {
       """aggregate(zip_with(v, v, (p, q) -> (p - q) * (p - q)),
         |  bigint(0), (acc, t) -> acc + t)""".stripMargin).as("d"))
     assert(!sq.queryExecution.optimizedPlan.toString
-      .toLowerCase.contains("dotlongarrays"))
+      .toLowerCase.contains("graft_dot"))
     assert(sq.collect().forall(_.getLong(0) == 0L))
     val seeded = v.select(expr(
       """aggregate(zip_with(v, v, (p, q) -> p * q),
         |  bigint(7), (acc, t) -> acc + t)""".stripMargin).as("d"))
     assert(!seeded.queryExecution.optimizedPlan.toString
-      .toLowerCase.contains("dotlongarrays"))
+      .toLowerCase.contains("graft_dot"))
   }
 
   test("extension rewrites the HOF squared distance to the native expression") {
@@ -299,7 +299,7 @@ class PlanSpec extends SparkSpec {
       """aggregate(zip_with(v, w, (p, q) -> (p - q) * (p - q)),
         |  bigint(0), (acc, t) -> acc + t)""".stripMargin).as("d"))
     val opt = df.queryExecution.optimizedPlan.toString
-    assert(opt.toLowerCase.contains("sumsqdifflongarrays"),
+    assert(opt.toLowerCase.contains("graft_sqdist"),
       s"HOF sqdist not rewritten:\n$opt")
     // result equality vs plain Scala: Σ(v−(v+3))² = 64·9
     val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -309,7 +309,7 @@ class PlanSpec extends SparkSpec {
       """aggregate(zip_with(v, w, (p, q) -> (p - q) * (q - p)),
         |  bigint(0), (acc, t) -> acc + t)""".stripMargin).as("d"))
     assert(!neg.queryExecution.optimizedPlan.toString
-      .toLowerCase.contains("sumsqdifflongarrays"))
+      .toLowerCase.contains("graft_sqdist"))
     assert(neg.collect().forall(_.getLong(0) == -64L * 9))
     // SQL-registered twin
     v.createOrReplaceTempView("ext_sqd_probe")
