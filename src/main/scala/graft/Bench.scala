@@ -222,11 +222,7 @@ object Bench {
     val warmResults: Seq[(String, Double)] =
       if (!warmBudgetOk) coldResults else {
       try {
-        Seq[(SparkSession, String) => DataFrame](
-          Tables.region, Tables.nation, Tables.customer, Tables.supplier,
-          Tables.part, Tables.orders, Tables.lineitem, Tables.documents,
-          Tables.embeddings, Tables.events)
-          .foreach(t => t(spark, sfDir).cache().count())
+        Tables.all.foreach { case (_, t) => t(spark, sfDir).cache().count() }
       } catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[bench] table-cache warm failed: ${e.getMessage}")
       }

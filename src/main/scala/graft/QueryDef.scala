@@ -62,9 +62,7 @@ object Dsl {
     * float64 (unscaled values ≪ 2^53 at verify scale), so the doubles are
     * bit-identical; pandas then sees float64 on both paths.
     */
-  def pin2(c: Column): Column = c.cast("double")
-  def pin4(c: Column): Column = c.cast("double")
-  def pin6(c: Column): Column = c.cast("double")
+  def pinDouble(c: Column): Column = c.cast("double")
 
   /** Exact FLOOR division of a BIGINT column by a positive literal:
     * `(c − pmod(c, m)) / m` — the numerator is an exact multiple of m

@@ -98,6 +98,15 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = p(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = p(s, d, "embeddings")
 
+  /** Every fixture table as (view name, loader): the one list that the
+    * ad-hoc SQL views and Bench's table-cache warm-up both walk.
+    */
+  val all: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "region" -> region, "nation" -> nation, "customer" -> customer,
+    "supplier" -> supplier, "part" -> part, "orders" -> orders,
+    "lineitem" -> lineitem, "documents" -> documents,
+    "embeddings" -> embeddings, "events" -> events)
+
   /** events.ts has shipped in two physical forms across fixture
     * generations: parquet timestamp[ns] (rounds 1–4), which stock Spark 4.x
     * refuses to read ([PARQUET_TYPE_ILLEGAL]) and must come in as raw long

@@ -34,11 +34,11 @@ object Aggregates {
         .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp_ntz"))
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
-          pin2(sum(dec(col("l_quantity")))).as("sum_qty"),
-          pin2(sum(dec(col("l_extendedprice")))).as("sum_base_price"),
-          pin4(sum(dec12(col("l_extendedprice")) * oneMinus(col("l_discount"))))
+          pinDouble(sum(dec(col("l_quantity")))).as("sum_qty"),
+          pinDouble(sum(dec(col("l_extendedprice")))).as("sum_base_price"),
+          pinDouble(sum(dec12(col("l_extendedprice")) * oneMinus(col("l_discount"))))
             .as("sum_disc_price"),
-          pin6(sum(dec12(col("l_extendedprice")) * oneMinus(col("l_discount"))
+          pinDouble(sum(dec12(col("l_extendedprice")) * oneMinus(col("l_discount"))
             * onePlus(col("l_tax")))).as("sum_charge"),
           avg4(sum(dec(col("l_quantity"))), count(lit(1))).as("avg_qty"),
           avg4(sum(dec(col("l_extendedprice"))), count(lit(1))).as("avg_price"),
@@ -90,7 +90,7 @@ object Aggregates {
           col("o_custkey") === col("c_custkey"))
         .groupBy(col("c_name"), col("c_custkey"), col("o_orderkey"),
           col("o_orderdate"), col("o_totalprice"))
-        .agg(pin2(sum(dec(col("l_quantity")))).as("sum_qty"))
+        .agg(pinDouble(sum(dec(col("l_quantity")))).as("sum_qty"))
         .select(col("c_name"), col("c_custkey"), col("o_orderkey"),
           epochUs(col("o_orderdate")).as("o_date_us"),
           col("o_totalprice"), col("sum_qty"))
@@ -121,7 +121,7 @@ object Aggregates {
           count(col("l_quantity")).as("cnt_qty"),
           min(col("l_extendedprice")).as("min_price"),
           max(col("l_extendedprice")).as("max_price"),
-          pin2(sum(dec(col("l_extendedprice")))).as("sum_price"),
+          pinDouble(sum(dec(col("l_extendedprice")))).as("sum_price"),
           avg4(sum(dec(col("l_extendedprice"))), count(lit(1))).as("avg_price")),
     Some("""SELECT count(*) AS cnt, count(l_quantity) AS cnt_qty,
            |  min(l_extendedprice) AS min_price, max(l_extendedprice) AS max_price,
@@ -150,7 +150,7 @@ object Aggregates {
       Tables.orders(s, d)
         .groupBy(col("o_custkey"))
         .agg(count(lit(1)).as("order_cnt"),
-          pin2(sum(dec(col("o_totalprice")))).as("total_spent"))
+          pinDouble(sum(dec(col("o_totalprice")))).as("total_spent"))
         .filter(col("order_cnt") >= 12)
         .orderBy(ascf("o_custkey")),
     Some("""SELECT o_custkey, count(*) AS order_cnt,
@@ -164,7 +164,7 @@ object Aggregates {
     (s, d) =>
       Tables.lineitem(s, d)
         .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(pin2(sum(dec(col("l_quantity")))).as("sum_qty"),
+        .agg(pinDouble(sum(dec(col("l_quantity")))).as("sum_qty"),
           count(lit(1)).as("cnt"))
         .orderBy(ascf("l_returnflag"), ascf("l_linestatus")),
     Some("""SELECT l_returnflag, l_linestatus,
@@ -177,7 +177,7 @@ object Aggregates {
     (s, d) =>
       Tables.lineitem(s, d)
         .cube(col("l_returnflag"), col("l_linestatus"))
-        .agg(pin2(sum(dec(col("l_quantity")))).as("sum_qty"),
+        .agg(pinDouble(sum(dec(col("l_quantity")))).as("sum_qty"),
           count(lit(1)).as("cnt"))
         .orderBy(ascf("l_returnflag"), ascf("l_linestatus")),
     Some("""SELECT l_returnflag, l_linestatus,
@@ -192,7 +192,7 @@ object Aggregates {
         .groupingSets(
           Seq(Seq(col("l_returnflag")), Seq(col("l_linestatus"))),
           col("l_returnflag"), col("l_linestatus"))
-        .agg(pin2(sum(dec(col("l_quantity")))).as("sum_qty"),
+        .agg(pinDouble(sum(dec(col("l_quantity")))).as("sum_qty"),
           count(lit(1)).as("cnt"))
         .orderBy(ascf("l_returnflag"), ascf("l_linestatus")),
     Some("""SELECT l_returnflag, l_linestatus,
@@ -304,7 +304,7 @@ object Aggregates {
       Tables.lineitem(s, d)
         .groupBy(col("l_returnflag"))
         .pivot("l_linestatus", Seq("F", "O"))
-        .agg(pin2(sum(dec(col("l_quantity")))))
+        .agg(pinDouble(sum(dec(col("l_quantity")))))
         .withColumnsRenamed(Map("F" -> "qty_f", "O" -> "qty_o"))
         .orderBy(ascf("l_returnflag")),
     Some("""SELECT l_returnflag,
@@ -550,10 +550,10 @@ object Aggregates {
           col("l_partkey") === col("p_partkey"))
         .groupBy(date_trunc("month", col("l_shipdate")).as("month"))
         .agg(
-          pin2(sum(when(col("p_type") === "PROMO", rev)
+          pinDouble(sum(when(col("p_type") === "PROMO", rev)
             .otherwise(lit(0).cast(org.apache.spark.sql.types
               .DecimalType(12, 2))))).as("promo_revenue"),
-          pin2(sum(rev)).as("total_revenue"),
+          pinDouble(sum(rev)).as("total_revenue"),
           count(lit(1)).as("n_items"))
       m.select(epochUs(col("month")).as("month_us"),
           col("promo_revenue"), col("total_revenue"), col("n_items"),
@@ -603,7 +603,7 @@ object Aggregates {
           && col("l_shipdate") < lit("1997-01-01").cast("timestamp_ntz")
           && pct(col("l_discount")).between(dlo, dhi)
           && col("l_quantity") < 24)
-        .agg(pin2(sum(dec12(col("l_extendedprice")) * pct(col("l_discount"))))
+        .agg(pinDouble(sum(dec12(col("l_extendedprice")) * pct(col("l_discount"))))
           .as("revenue"),
           count(lit(1)).as("n_items"))
         .orderBy(ascf("n_items"))
@@ -757,10 +757,10 @@ object Aggregates {
           expr("count(*) FILTER (WHERE l_quantity > 25)").as("n_heavy"),
           expr("count(*) FILTER (WHERE l_quantity > 25 AND l_linestatus = 'O')")
             .as("n_heavy_open"),
-          coalesce(pin2(expr(
+          coalesce(pinDouble(expr(
             "sum(CAST(l_quantity AS DECIMAL(18,2))) FILTER (WHERE l_linestatus = 'F')")),
             lit(0d)).as("qty_f"),
-          coalesce(pin4(expr(
+          coalesce(pinDouble(expr(
             """sum(CAST(l_extendedprice AS DECIMAL(12,2))
               |  * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(3,2))))
               |FILTER (WHERE CAST(l_discount AS DECIMAL(3,2))

@@ -142,7 +142,7 @@ object Lakehouse {
           col("o_custkey") === col("c_custkey"))
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n_orders"),
-          pin2(sum(dec(col("o_totalprice")))).as("total_revenue"))
+          pinDouble(sum(dec(col("o_totalprice")))).as("total_revenue"))
         .orderBy(ascf("c_mktsegment"))
     },
     Some("""SELECT c_mktsegment, count(*) AS n_orders,

@@ -29,7 +29,7 @@ object Relational {
         .select(
           col("l_orderkey"), col("l_linenumber"),
           col("l_quantity"), col("l_extendedprice"),
-          pin4(dec12(col("l_extendedprice")) * oneMinus(col("l_discount")))
+          pinDouble(dec12(col("l_extendedprice")) * oneMinus(col("l_discount")))
             .as("revenue"))
         .orderBy(ascf("l_orderkey"), ascf("l_linenumber"),
           ascf("l_quantity"), ascf("l_extendedprice"), ascf("revenue")),
@@ -407,7 +407,7 @@ object Relational {
       c.join(o, col("c_custkey") === col("o_custkey"))
         .join(l, col("o_orderkey") === col("l_orderkey"))
         .groupBy(col("l_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-        .agg(pin4(sum(dec12(col("l_extendedprice")) * oneMinus(col("l_discount"))))
+        .agg(pinDouble(sum(dec12(col("l_extendedprice")) * oneMinus(col("l_discount"))))
           .as("revenue"))
         .select(col("l_orderkey"), col("revenue"),
           epochUs(col("o_orderdate")).as("o_orderdate_us"),
@@ -435,7 +435,7 @@ object Relational {
       val p = Tables.part(s, d).filter(col("p_type") === "PROMO")
       l.join(broadcast(p), col("l_partkey") === col("p_partkey"))
         .groupBy(col("p_brand"))
-        .agg(pin2(sum(dec(col("l_quantity")))).as("sum_qty"),
+        .agg(pinDouble(sum(dec(col("l_quantity")))).as("sum_qty"),
           count(lit(1)).as("line_cnt"))
         .orderBy(ascf("p_brand"))
     },
@@ -471,7 +471,7 @@ object Relational {
           col("s_nationkey") === col("n_nationkey"))
         .join(broadcast(region), col("n_regionkey") === col("r_regionkey"))
         .groupBy(col("n_name"))
-        .agg(pin2(sum(dec12(col("l_extendedprice")) * oneMinus(col("l_discount"))))
+        .agg(pinDouble(sum(dec12(col("l_extendedprice")) * oneMinus(col("l_discount"))))
           .as("revenue"),
           count(lit(1)).as("n_items"))
         .orderBy(ascf("n_name"))
@@ -517,7 +517,7 @@ object Relational {
           col("l_orderkey") === col("o_orderkey"))
         .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
         .groupBy(col("l_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-        .agg(pin4(sum(dec12(col("l_extendedprice")) * oneMinus(col("l_discount"))))
+        .agg(pinDouble(sum(dec12(col("l_extendedprice")) * oneMinus(col("l_discount"))))
           .as("revenue"))
         .select(col("l_orderkey"), col("revenue"),
           epochUs(col("o_orderdate")).as("o_date_us"), col("o_orderpriority"))
@@ -563,7 +563,7 @@ object Relational {
         .join(broadcast(Tables.nation(s, d)),
           col("c_nationkey") === col("n_nationkey"))
         .groupBy(col("c_custkey"), col("c_name"), col("n_name"))
-        .agg(pin4(sum(dec12(col("l_extendedprice"))
+        .agg(pinDouble(sum(dec12(col("l_extendedprice"))
           * oneMinus(col("l_discount")))).as("revenue"),
           count(lit(1)).as("n_items"))
         .orderBy(descl("revenue"), ascf("c_custkey"))
@@ -610,9 +610,9 @@ object Relational {
           band("Brand#7", 11, 20, 10, 20) ||
           band("Brand#13", 21, 30, 20, 30))
         .agg(count(lit(1)).as("n_items"),
-          pin4(sum(dec12(col("l_extendedprice"))
+          pinDouble(sum(dec12(col("l_extendedprice"))
             * oneMinus(col("l_discount")))).as("revenue"),
-          pin2(sum(dec(col("l_quantity")))).as("qty_sum"))
+          pinDouble(sum(dec(col("l_quantity")))).as("qty_sum"))
         .orderBy(ascf("n_items"))
     },
     Some("""SELECT count(*) AS n_items,
@@ -685,7 +685,7 @@ object Relational {
       graft.plans.SaltedJoin.inner(Tables.orders(s, d), cust, "o_custkey")
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n_orders"),
-          pin2(sum(dec(col("o_totalprice")))).as("total_price"))
+          pinDouble(sum(dec(col("o_totalprice")))).as("total_price"))
         .orderBy(ascf("c_mktsegment"))
     },
     Some("""SELECT c_mktsegment, count(*) AS n_orders,
@@ -751,7 +751,7 @@ object Relational {
           col("o_custkey") === col("c_custkey"), "left_semi")
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n_orders"),
-          pin2(sum(dec(col("o_totalprice")))).as("total_price"))
+          pinDouble(sum(dec(col("o_totalprice")))).as("total_price"))
         .orderBy(ascf("o_orderpriority"))
     },
     Some("""SELECT o_orderpriority, count(*) AS n_orders,

@@ -159,7 +159,7 @@ object Scalars {
           col("o_orderkey").cast("string").as("key_str"),
           col("o_orderkey").cast("string").cast("bigint").as("key_back"),
           col("o_custkey").cast("double").as("cust_dbl"),
-          pin2(dec(col("o_totalprice"))).as("price_dec"),
+          pinDouble(dec(col("o_totalprice"))).as("price_dec"),
           (col("o_orderkey") % 100).cast("int").as("key_mod_i32"),
           epochUs(col("o_orderdate")).as("odate_us"))
         .orderBy(ascf("o_orderkey")),

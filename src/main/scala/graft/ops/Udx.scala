@@ -52,7 +52,7 @@ object Udx {
           col("l_quantity"))
         .groupBy(col("disc_class"))
         .agg(count(lit(1)).as("cnt"),
-          pin2(sum(dec(col("l_quantity")))).as("sum_qty"))
+          pinDouble(sum(dec(col("l_quantity")))).as("sum_qty"))
         .orderBy(ascf("disc_class"))
     },
     Some("""SELECT CASE WHEN l_discount < 0.03 THEN 'low'

@@ -56,7 +56,7 @@ object Windows {
       Tables.orders(s, d)
         .select(col("o_custkey"), col("o_orderkey"),
           epochUs(col("o_orderdate")).as("o_date_us"),
-          pin2(sum(dec(col("o_totalprice"))).over(w)).as("running_spend"))
+          pinDouble(sum(dec(col("o_totalprice"))).over(w)).as("running_spend"))
         .orderBy(ascf("o_custkey"), ascf("o_orderkey"))
     },
     Some("""SELECT o_custkey, o_orderkey, epoch_us(o_orderdate) AS o_date_us,
@@ -107,7 +107,7 @@ object Windows {
         .withColumn("cents", round(col("o_totalprice") * 100, 0).cast("bigint"))
         .select(col("o_custkey"), col("o_orderkey"), col("cents"),
           count(lit(1)).over(w).as("near_cnt"),
-          pin2(sum(dec(col("o_totalprice"))).over(w)).as("near_sum"))
+          pinDouble(sum(dec(col("o_totalprice"))).over(w)).as("near_sum"))
         .orderBy(ascf("o_custkey"), ascf("o_orderkey"))
     },
     Some("""SELECT o_custkey, o_orderkey, cents,

@@ -33,7 +33,8 @@ import java.nio.charset.StandardCharsets.UTF_8
   *                                  X-Graft-Offset headers, so a client
   *                                  pages a large result in bounded
   *                                  chunks (stop when a page comes back
-  *                                  short). Page order is the result
+  *                                  short; the count is derived from
+  *                                  the DONE record). Page order is the result
   *                                  parquet's stable scan order — pages
   *                                  of one DONE job never shift because
   *                                  its files are immutable. Malformed
@@ -151,7 +152,7 @@ final class HttpEndpoint(spark: SparkSession, outRoot: String,
         val client = queryParam(ex, "client").getOrElse("default")
         respond(ex, 200, s"""{"id":${srv.submitSql(body, sf, client)}}""")
       case ("POST", CancelPath(id)) =>
-        try { srv.status(id.toLong); srv.cancel(id.toLong)
+        try { srv.cancel(id.toLong)
           respond(ex, 200, s"""{"id":$id,"cancelled":true}""") }
         catch { case _: NoSuchElementException =>
           respond(ex, 404, s"""{"error":"unknown job id: $id"}""") }
@@ -173,13 +174,13 @@ final class HttpEndpoint(spark: SparkSession, outRoot: String,
                 // missing #4: collect().mkString buffered a wide-row
                 // page as one multi-hundred-MB driver string):
                 // toLocalIterator holds one partition's rows at a time
-                // and chunked transfer flushes as it goes. The bounded
-                // count() first keeps the row-count paging header
-                // clients stop on — O(page) work against the same
-                // CollectLimit plan.
+                // and chunked transfer flushes as it goes. The row-count
+                // paging header clients stop on is the page's size,
+                // derived from the DONE record's row count: no Spark job
+                // runs before the page streams.
                 val page = spark.read.parquet(d.resultPath)
                   .offset(offset).limit(limit)
-                val n = page.count()
+                val n = math.min(limit.toLong, math.max(0L, d.rows - offset))
                 ex.getResponseHeaders.set("X-Graft-Row-Count", n.toString)
                 ex.getResponseHeaders.set("X-Graft-Offset", offset.toString)
                 ex.getResponseHeaders.set("Content-Type",

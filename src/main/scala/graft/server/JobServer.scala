@@ -1,10 +1,14 @@
 package graft.server
 
 import graft.{Caches, Registry, Sessions}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 
 import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, ExecutorService, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicLong
+import scala.util.Using
 
 /** Resident job-server veneer over the contract registry (VERDICT r4
   * missing #2): the "submit a named job, poll status, fetch the result"
@@ -18,7 +22,7 @@ import java.util.concurrent.atomic.AtomicLong
   *   submit(query, sfDir) → id   (rejects unknown query names eagerly)
   *   submitSql(sql, sfDir) → id  (raw ANSI SQL over the fixture tables,
   *                                isolated child session per statement)
-  *   status(id)                  (Queued | Running | Done | Failed)
+  *   status(id)                  (Queued | Running | Done | Failed | Cancelled)
   *   await(id, timeout)          (block until terminal)
   *   result path = outRoot/id    (parquet, written once on success)
   *
@@ -39,11 +43,18 @@ final class JobServer(spark: SparkSession, outRoot: String,
   final case class Done(resultPath: String, rows: Long) extends Status
   final case class Failed(error: String) extends Status
 
+  /** One submission's record: status (written only by its worker), a
+    * latch released once that is terminal, and the cancel flag. Worker
+    * and waiters hold the record, so pruning its entry strands neither.
+    */
+  private final class Job {
+    @volatile var status: Status = Queued
+    @volatile var cancelRequested = false
+    val done = new CountDownLatch(1)
+  }
+
   private val nextId = new AtomicLong(0L)
-  private val jobs = new ConcurrentHashMap[Long, Status]()
-  private val done = new ConcurrentHashMap[Long, CountDownLatch]()
-  private val cancelRequested =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+  private val jobs = new ConcurrentHashMap[Long, Job]()
   // Job-group names must be unique across SERVER INSTANCES sharing one
   // SparkContext, not just across this server's ids:
   // cancelJobGroupAndFutureJobs poisons a group name for the context's
@@ -55,9 +66,6 @@ final class JobServer(spark: SparkSession, outRoot: String,
 
   private def groupId(id: Long) = s"graft-$instance-job-$id"
   private val pool: ExecutorService = Executors.newFixedThreadPool(parallelism)
-  // A resident server must not grow per-submission state forever:
-  // terminal entries beyond `retainTerminal` are pruned oldest-first on
-  // each submit (ids are monotone). In-flight jobs are never pruned.
 
   /** Enqueue a registry query against `sfDir`; returns the job id.
     * Unknown names fail HERE (the submitter's bug), not in the worker.
@@ -95,15 +103,8 @@ final class JobServer(spark: SparkSession, outRoot: String,
       client: String = "default"): Long =
     enqueue(s"sql @ $sfDir", client) { parent =>
       val session = parent.newSession()
-      Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)](
-        "region" -> graft.Tables.region, "nation" -> graft.Tables.nation,
-        "customer" -> graft.Tables.customer, "supplier" -> graft.Tables.supplier,
-        "part" -> graft.Tables.part, "orders" -> graft.Tables.orders,
-        "lineitem" -> graft.Tables.lineitem,
-        "documents" -> graft.Tables.documents,
-        "embeddings" -> graft.Tables.embeddings,
-        "events" -> graft.Tables.events)
-        .foreach { case (n, f) => f(session, sfDir).createOrReplaceTempView(n) }
+      graft.Tables.all.foreach { case (n, f) =>
+        f(session, sfDir).createOrReplaceTempView(n) }
       // cataloged manifest-lake tables (VERDICT r7 missing #4): newest
       // version by name, every committed version as <name>_v<N> — ad-hoc
       // SQL time travel without knowing manifest paths
@@ -114,22 +115,16 @@ final class JobServer(spark: SparkSession, outRoot: String,
   private def enqueue(desc: String, client: String)(
       build: SparkSession => org.apache.spark.sql.DataFrame): Long = {
     val id = nextId.getAndIncrement()
-    jobs.put(id, Queued)
-    // the worker counts down THIS captured reference, never done.get(id):
-    // a concurrent submit's pruneTerminal may remove the map entries in
-    // the window between the terminal jobs.put and the finally, and a
-    // map lookup there NPE'd the worker and left await() callers hanging
-    // until timeout (review r5)
-    val latch = new CountDownLatch(1)
-    done.put(id, latch)
+    val job = new Job
+    jobs.put(id, job)
     pruneTerminal()
     pool.execute { () =>
-      jobs.put(id, Running)
+      job.status = Running
       try {
         // a cancel that lands while the job is still QUEUED has no Spark
         // job group to kill yet — honor it here instead of running a
         // job the submitter already gave up on
-        if (cancelRequested.contains(id))
+        if (job.cancelRequested)
           throw new InterruptedException("cancelled before start")
         // each submission runs as its own Spark job group: cancellable
         // per-submission, and attributed in the UI/event log
@@ -142,10 +137,8 @@ final class JobServer(spark: SparkSession, outRoot: String,
         spark.sparkContext.setLocalProperty("spark.scheduler.pool",
           s"graft-client-$client")
         val path = s"$outRoot/$id"
-        val df = build(spark)
-        df.write.mode("overwrite").parquet(path)
-        val rows = spark.read.parquet(path).count()
-        jobs.put(id, Done(path, rows))
+        build(spark).write.mode("overwrite").parquet(path)
+        job.status = Done(path, parquetRows(path))
       } catch {
         // any failure of a job whose cancellation was requested IS the
         // cancellation taking effect (Spark surfaces it as a
@@ -153,8 +146,8 @@ final class JobServer(spark: SparkSession, outRoot: String,
         // deep) — report the state the submitter asked for, not the
         // incidental exception
         case e: Throwable =>
-          if (cancelRequested.contains(id)) jobs.put(id, Cancelled)
-          else jobs.put(id, Failed(String.valueOf(e)))
+          job.status =
+            if (job.cancelRequested) Cancelled else Failed(String.valueOf(e))
       } finally {
         spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
         spark.sparkContext.clearJobGroup()
@@ -163,39 +156,50 @@ final class JobServer(spark: SparkSession, outRoot: String,
         // scoping is per-thread, so a concurrent job's in-flight caches
         // are untouched
         Caches.releaseScoped()
-        latch.countDown()
+        job.done.countDown()
       }
     }
     id
   }
 
-  /** Drop oldest TERMINAL job records beyond `retainTerminal`. */
+  /** `Done.rows`, the one row count the spool status, status JSON and
+    * `/rows` paging header report: the sum of the written part files'
+    * footer record counts, read on the driver with no Spark job. Names
+    * starting with `_` or `.` are skipped, as Spark's file listing does.
+    */
+  private def parquetRows(path: String): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = new Path(path)
+    dir.getFileSystem(conf).listStatus(dir)
+      .filter(f => f.isFile && !f.getPath.getName.matches("[_.].*"))
+      .map(f => Using.resource(ParquetFileReader.open(
+        HadoopInputFile.fromStatus(f, conf)))(_.getRecordCount)).sum
+  }
+
+  /** A resident server must not grow per-submission state forever: drop
+    * the oldest terminal records beyond `retainTerminal` on each submit
+    * (ids are monotone). In-flight jobs are never pruned.
+    */
   private def pruneTerminal(): Unit =
     if (jobs.size > retainTerminal) {
       import scala.jdk.CollectionConverters._
-      val prunable = jobs.asScala.toSeq
-        .collect { case (id, _: Done) => id
-                   case (id, _: Failed) => id
-                   case (id, Cancelled) => id }
-        .sorted.dropRight(retainTerminal)
-      prunable.foreach { id =>
-        jobs.remove(id); done.remove(id); cancelRequested.remove(id)
-      }
+      jobs.asScala.toSeq.collect { case (id, j) if j.done.getCount == 0 => id }
+        .sorted.dropRight(retainTerminal).foreach(jobs.remove)
     }
 
-  def status(id: Long): Status =
-    Option(jobs.get(id)).getOrElse(
-      throw new NoSuchElementException(s"unknown job id: $id"))
+  private def job(id: Long): Job = Option(jobs.get(id)).getOrElse(
+    throw new NoSuchElementException(s"unknown job id: $id"))
+
+  def status(id: Long): Status = job(id).status
 
   /** Retained job-record count (terminal + in-flight) — health surface. */
   def jobCount: Int = jobs.size
 
   /** Block until the job reaches a terminal state (or timeout). */
   def await(id: Long, timeoutMs: Long = 300000L): Status = {
-    val latch = Option(done.get(id)).getOrElse(
-      throw new NoSuchElementException(s"unknown job id: $id"))
-    latch.await(timeoutMs, TimeUnit.MILLISECONDS)
-    status(id)
+    val j = job(id)
+    j.done.await(timeoutMs, TimeUnit.MILLISECONDS)
+    j.status
   }
 
   /** Cancel a submission: a queued job is skipped when its worker picks
@@ -212,10 +216,11 @@ final class JobServer(spark: SparkSession, outRoot: String,
     * The future-jobs form also fails the action's later jobs, so a
     * multi-stage query cannot outrun the cancel between stages. Group
     * ids are single-use (monotone job ids), so poisoning the group
-    * forever is exactly the semantics wanted.
+    * forever is exactly the semantics wanted — which is also why an id
+    * not issued yet throws `NoSuchElementException`, as `status` does.
     */
   def cancel(id: Long): Unit = {
-    cancelRequested.add(id)
+    job(id).cancelRequested = true
     spark.sparkContext.cancelJobGroupAndFutureJobs(groupId(id))
   }
 
@@ -284,26 +289,18 @@ object JobServer {
               writeStatus(name, s"FAILED ${e.getMessage}")
           }
         }
-        // `<name>.cancel` drop-file: cancel that submission (idempotent;
-        // a cancel for an unknown/terminal name is ignored)
         inflight.toSeq.foreach { case (name, id) =>
+          // `<name>.cancel` drop-file: cancel that submission (idempotent;
+          // a cancel for an unknown/terminal name is ignored)
           if (new java.io.File(spoolDir, s"$name.cancel").exists())
             srv.cancel(id)
-        }
-        inflight.toSeq.foreach { case (name, id) =>
-          srv.status(id) match {
-            case d: srv.Done =>
-              writeStatus(name, s"DONE rows=${d.rows} path=${d.resultPath}")
-              inflight.remove(name)
-            case srv.Cancelled =>
-              writeStatus(name, "CANCELLED")
-              inflight.remove(name)
+          (srv.status(id) match {
+            case d: srv.Done => Some(s"DONE rows=${d.rows} path=${d.resultPath}")
+            case srv.Cancelled => Some("CANCELLED")
             case fl: srv.Failed =>
-              writeStatus(name,
-                s"FAILED ${fl.error.linesIterator.nextOption().getOrElse("")}")
-              inflight.remove(name)
-            case _ => ()
-          }
+              Some(s"FAILED ${fl.error.linesIterator.nextOption().getOrElse("")}")
+            case _ => None
+          }).foreach { text => writeStatus(name, text); inflight.remove(name) }
         }
         Thread.sleep(pollMs)
       }

@@ -1,7 +1,14 @@
 package graft
 
 import graft.server.JobServer
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
+
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
 
 /** The job-server veneer must behave like a resident master: concurrent
   * submissions complete independently, results land at per-job paths,
@@ -9,6 +16,61 @@ import org.apache.spark.sql.functions._
   * breakage as a Failed status — never a hung or poisoned server).
   */
 class ServerSpec extends SparkSpec {
+
+  /** Runs `body` and returns its result with the job group of every
+    * Spark job it started and the description of every SQL execution it
+    * ran: the job group's description if one is set, else the action's
+    * call site, such as `count at HttpEndpoint.scala:<line>`.
+    */
+  private def sparkWorkOf[A](body: => A): (A, Seq[Option[String]], Seq[String]) = {
+    val groups = new ConcurrentLinkedQueue[Option[String]]()
+    val execs = new ConcurrentLinkedQueue[String]()
+    val log = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = groups.add(
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => execs.add(x.description)
+        case _ => ()
+      }
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(log)
+    try {
+      val a = body
+      ListenerBusDrain(spark.sparkContext)
+      (a, groups.asScala.toSeq, execs.asScala.toSeq)
+    } finally spark.sparkContext.removeSparkListener(log)
+  }
+
+  test("a key job's group runs the jobs of writing its DataFrame and none after") {
+    // Done.rows comes from the written files' footers, so the job group
+    // holds exactly the jobs of the write itself: no re-read, no count
+    val out = java.nio.file.Files.createTempDirectory("jobsrv").toString
+    val srv = new JobServer(spark, out, parallelism = 1)
+    val sc = spark.sparkContext
+    try {
+      val (_, direct, directExecs) = sparkWorkOf {
+        sc.setJobGroup("direct-write", "q_agg_q1 written directly")
+        try Registry.queries("q_agg_q1")(spark, sfDir).write.parquet(s"$out/direct")
+        finally sc.clearJobGroup()
+      }
+      val (id, served, servedExecs) = sparkWorkOf {
+        val id = srv.submit("q_agg_q1", sfDir)
+        srv.await(id)
+        id
+      }
+      val group = served.filter(_.exists(_.endsWith(s"-job-$id")))
+      assert(direct.nonEmpty && direct.forall(_.contains("direct-write")) &&
+        group.size == direct.size,
+        s"served ${group.size} jobs ($servedExecs), " +
+          s"direct ${direct.size} ($directExecs)")
+      srv.status(id) match {
+        case d: srv.Done =>
+          assert(d.rows == spark.read.parquet(s"$out/direct").count())
+        case other => fail(s"expected Done, got $other")
+      }
+    } finally srv.shutdown()
+  }
 
   test("two concurrent submissions both complete with results") {
     val out = java.nio.file.Files.createTempDirectory("jobsrv").toString
@@ -74,6 +136,19 @@ class ServerSpec extends SparkSpec {
       srv.await(ev) match {
         case d: srv.Done => assert(d.rows == 1)
         case other => fail(s"expected Done, got $other")
+      }
+      // Done.rows is summed from the part files' footers: it matches the
+      // rows read back for an empty result and for a multi-file one
+      Seq("SELECT * FROM region WHERE false" -> 1,
+          "SELECT /*+ REPARTITION(3) */ * FROM nation" -> 3).foreach {
+        case (q, files) => srv.await(srv.submitSql(q, sfDir)) match {
+          case d: srv.Done =>
+            val parts = new java.io.File(d.resultPath).list()
+              .count(_.startsWith("part-"))
+            assert(parts == files, s"$q wrote $parts files")
+            assert(d.rows == spark.read.parquet(d.resultPath).count(), q)
+          case other => fail(s"expected Done for $q, got $other")
+        }
       }
     } finally srv.shutdown()
   }
@@ -310,6 +385,13 @@ class ServerSpec extends SparkSpec {
 
   private def httpGet(url: String,
       headers: Seq[(String, String)] = Nil): (Int, String) = {
+    val (code, body, _) = httpGetRows(url, headers)
+    (code, body)
+  }
+
+  /** `httpGet` plus the X-Graft-Row-Count header, if any. */
+  private def httpGetRows(url: String,
+      headers: Seq[(String, String)] = Nil): (Int, String, Option[Long]) = {
     val c = new java.net.URL(url).openConnection()
       .asInstanceOf[java.net.HttpURLConnection]
     c.setConnectTimeout(10000); c.setReadTimeout(60000)
@@ -317,7 +399,8 @@ class ServerSpec extends SparkSpec {
     val code = c.getResponseCode
     val in = if (code >= 400) c.getErrorStream else c.getInputStream
     val body = new String(in.readAllBytes(), "UTF-8")
-    c.disconnect(); (code, body)
+    val rowCount = Option(c.getHeaderField("X-Graft-Row-Count")).map(_.toLong)
+    c.disconnect(); (code, body, rowCount)
   }
 
   private def httpPost(url: String, body: String,
@@ -372,9 +455,15 @@ class ServerSpec extends SparkSpec {
       assert(sc == 200, s"$sc $sb")
       val sid = idOf(sb)
       assert(pollState(base, sid, Set("DONE", "FAILED")) == "DONE")
-      val (_, srows) = httpGet(s"$base/v1/jobs/$sid/rows")
+      // the row-count header comes from the DONE record: a one-file
+      // result pages with no count job
+      val ((_, srows, sn), rowJobs, rowExecs) =
+        sparkWorkOf(httpGetRows(s"$base/v1/jobs/$sid/rows"))
       assert(srows.trim ==
         s"""{"n":${Tables.region(spark, sfDir).count()}}""", srows)
+      assert(sn.contains(1L), s"row-count header $sn")
+      assert(rowJobs.nonEmpty && rowExecs.nonEmpty &&
+        !rowExecs.exists(_.startsWith("count at")), s"/rows ran: $rowExecs")
       // error contract: unknown key 400, unknown id 404, rows-on-running 409
       assert(httpPost(s"$base/v1/keys", "q_no_such_query")._1 == 400)
       assert(httpGet(s"$base/v1/jobs/99999")._1 == 404)
@@ -413,9 +502,12 @@ class ServerSpec extends SparkSpec {
       val id = idOf(sb)
       assert(pollState(base, id, Set("DONE", "FAILED"), headers = auth) == "DONE")
       val pages = Seq(0, 10, 20).map { off =>
-        val (c, b) = httpGet(s"$base/v1/jobs/$id/rows?limit=10&offset=$off", auth)
+        val (c, b, n) =
+          httpGetRows(s"$base/v1/jobs/$id/rows?limit=10&offset=$off", auth)
         assert(c == 200, s"$c $b")
-        b.linesIterator.filter(_.nonEmpty).toSeq
+        val lines = b.linesIterator.filter(_.nonEmpty).toSeq
+        assert(n.contains(lines.size.toLong), s"row-count header $n")
+        lines
       }
       assert(pages.map(_.size) == Seq(10, 10, 5))
       val keys = pages.flatten
@@ -428,9 +520,9 @@ class ServerSpec extends SparkSpec {
       assert(httpGet(s"$base/v1/jobs/$id/rows?limit=-5", auth)._1 == 400)
       // a huge-but-valid offset must page empty, never 500 (ADVICE r9:
       // offset+limit used to overflow Int inside CollectLimit planning)
-      val (hc, hb) = httpGet(
+      val (hc, hb, hn) = httpGetRows(
         s"$base/v1/jobs/$id/rows?limit=10&offset=2147483647", auth)
-      assert(hc == 200 && hb.trim.isEmpty, s"$hc $hb")
+      assert(hc == 200 && hb.trim.isEmpty && hn.contains(0L), s"$hc $hb $hn")
     } finally ep.stop()
   }
 
@@ -485,6 +577,18 @@ class ServerSpec extends SparkSpec {
       val (_, ab) = httpPost(s"$base/v1/keys", "q_agg_global")
       assert(pollState(base, idOf(ab), Set("DONE", "FAILED")) == "DONE")
     } finally ep.stop()
+  }
+
+  test("cancelling an id not issued yet throws and spares the job that gets it") {
+    val out = java.nio.file.Files.createTempDirectory("jobsrv").toString
+    val srv = new JobServer(spark, out, parallelism = 2)
+    try {
+      val n = srv.submit("q_agg_global", sfDir)
+      intercept[NoSuchElementException](srv.cancel(n + 5))
+      val later = (1 to 5).map(_ => srv.submit("q_agg_global", sfDir))
+      assert(later.last == n + 5)
+      assert(srv.await(n + 5).isInstanceOf[srv.Done])
+    } finally srv.shutdown()
   }
 
   test("cancelling a queued job skips it without running") {
